@@ -42,7 +42,7 @@ def clear_result_memos() -> None:
     """Drop every cross-invocation memo of driver-collected job results.
 
     Several operators memoize small driver-side artifacts that are
-    deterministic in (input plan, params) — IVF seed centroids, collected
+    deterministic in (input data, params) — IVF seed centroids, collected
     probe vectors, the psum auto-strategy width sample, the GEMM hot-block
     stat, and the trained classifier / DSIR model weights. Within one
     application that reuse is the index/model-at-rest architecture (a
@@ -52,19 +52,10 @@ def clear_result_memos() -> None:
     query (VERDICT r14 item 2). Bench harnesses call this between timed
     repetitions so every memo's lifetime is at most one query invocation
     in bench context. Results are unaffected: every memoized value is
-    recomputed identically from the inputs.
+    recomputed identically from the inputs. Loader scans (see :mod:`.memo`)
+    are kept.
     """
-    import importlib
+    from . import memo
 
-    from .operators import corpus, dedup, similarity
-
-    # operators/__init__ rebinds the name `proportional_sum` to the
-    # function, so fetch the module itself
-    _psum_mod = importlib.import_module(f"{__name__}.operators.proportional_sum")
-
-    similarity._SEED_MEMO.clear()
-    similarity._QVEC_MEMO.clear()
-    _psum_mod._WIDTH_MEMO.clear()
-    dedup._HOT_BLOCK_MEMO.clear()
-    corpus._CLF_WEIGHTS_MEMO.clear()
-    corpus._DSIR_LAM_MEMO.clear()
+    for kind in memo.RESULT_KINDS:
+        memo.clear(kind)

@@ -39,8 +39,6 @@ exact at oracle scale, and algorithm-independent: it pins the *semantics*
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,14 +52,6 @@ from pyspark.sql import functions as F
 # shape) runs unchanged. Both produce component = min reachable id, so
 # results are identical by construction (pytest-pinned both ways).
 MAX_DRIVER_EDGES = 200_000
-
-
-def _driver_edge_guard() -> int:
-    """Env override read at CALL time (ADVICE r14 item 4) so in-session
-    A/B toggling works; <= 0 forces the distributed path."""
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(MAX_DRIVER_EDGES))
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -189,7 +179,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev = _fingerprint(edges)
-    guard = _driver_edge_guard() if max_driver_edges is None else max_driver_edges
+    guard = MAX_DRIVER_EDGES if max_driver_edges is None else max_driver_edges
     # guard <= 0 means "always distributed" (ADVICE r14 item 3: the tests'
     # documented way to force the star loop — an empty graph must not slip
     # through 0 <= 0). Gate on the DIRECTED distinct edge count; pagerank
@@ -403,12 +393,14 @@ def pagerank(
     edges_deg = bidir.join(deg, "u").localCheckpoint(eager=False)
     base_q = (100 - damping_num) * quant // 100
     n_edges = edges_deg.count()
-    guard = _driver_edge_guard() if max_driver_edges is None else max_driver_edges
     # n_edges counts the SYMMETRIZED (bidirectional) rows — ~2x the
-    # directed distinct count connected_components gates on — so compare
-    # against 2*guard to keep the two operators' routing consistent near
-    # the boundary (ADVICE r14 item 3); guard <= 0 forces distributed.
-    if guard > 0 and n_edges <= 2 * guard:
+    # directed distinct count connected_components gates on — so the
+    # default guard is doubled to keep the two operators' routing
+    # consistent near the boundary (ADVICE r14 item 3). A caller's
+    # max_driver_edges bounds the symmetrized rows on the driver as given;
+    # <= 0 forces distributed.
+    guard = 2 * MAX_DRIVER_EDGES if max_driver_edges is None else max_driver_edges
+    if guard > 0 and n_edges <= guard:
         # Small-graph fast path (r14, same guard/contract as
         # connected_components): the quantized recurrence is exact integer
         # arithmetic — Python // and % on the non-negative longs ARE

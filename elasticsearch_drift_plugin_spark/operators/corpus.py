@@ -24,12 +24,12 @@ Scale design:
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.hashing import HEX15_SQL_FN, md5_hash60
+from ..functions.sql_literal import sql_str
 from ..sources.flows import load_table
 
 QUANT = 1_000_000
@@ -804,15 +804,11 @@ def dsir_weights(
     raw = docs.where(f"NOT ({target_where})")
     doc_b = _hashed_gram_counts(raw, buckets)
     # λ-table memo (r12, the quality-clf pattern): the fitted model is a
-    # BOUNDED `buckets`-row table, deterministic in (input fingerprint,
-    # params) — dsir_weights + dsir_sample re-fit the identical model
-    # per session otherwise. The value is a session-bound checkpointed
-    # frame, so a stale session invalidates the entry.
-    key = _clf_memo_key(docs, "dsir-lam", target_where, int(buckets))
-    cached = _memo_get(_DSIR_LAM_MEMO, key)
-    if cached is not None and cached[0] is docs.sparkSession:
-        lam = cached[1]
-    else:
+    # BOUNDED `buckets`-row table, deterministic in (input, params) —
+    # dsir_weights + dsir_sample re-fit the identical model per session
+    # otherwise. The value is a session-bound checkpointed frame.
+
+    def fit_lambda() -> DataFrame:
         target = docs.where(target_where)
         cr = (
             doc_b.groupBy("b")
@@ -828,7 +824,7 @@ def dsir_weights(
         n_t = ct.agg(F.sum("ct")).collect()[0][0] or 0
         n_r = cr.agg(F.sum("cr")).collect()[0][0] or 0
         bl = float(buckets)
-        lam = cr.join(ct, "b", "left").select(
+        return cr.join(ct, "b", "left").select(
             "b",
             (
                 F.floor(
@@ -844,9 +840,9 @@ def dsir_weights(
                 )
             ).alias("lam_q"),
         ).localCheckpoint(eager=True)
-        if key is not None:
-            _memo_put(_DSIR_LAM_MEMO, key, (docs.sparkSession, lam),
-                      session_at=0)
+
+    key = memo.frame_key(docs, target_where, int(buckets))
+    lam = memo.get_or_compute("dsir_lambda", key, docs.sparkSession, fit_lambda)
     scored = (
         doc_b.join(F.broadcast(lam), "b")
         .groupBy("doc_id")
@@ -1005,76 +1001,6 @@ CLF_LR_DEN = 50
 MAX_CLF_TRAIN_DOCS = 100_000
 
 
-# Trained-weight memo (VERDICT r11 item 4): quality_clf /
-# clf_calibration / train_curate_clf each re-ran the IDENTICAL bounded
-# GD train per bench pass (~3-11 s each). Training is exact-int64
-# deterministic, so frozen weights are safely reusable when the input
-# is byte-identical: key = (backing files + mtimes, canonical plan
-# semantic hash, every training param) — the knn index-at-rest mtime
-# memo pattern. ONLY file-backed frames memoize (an in-memory test
-# frame's semantic hash does not pin its data).
-_CLF_WEIGHTS_MEMO: "OrderedDict[tuple, dict[int, int]]" = OrderedDict()
-
-# (session, checkpointed λ frame) per (input fingerprint, params) — the
-# DSIR model-fit twin of the weights memo; session-bound because the
-# value references checkpoint RDDs (validated on lookup).
-_DSIR_LAM_MEMO: "OrderedDict[tuple, tuple]" = OrderedDict()
-
-# Both memos are capped LRUs (ADVICE r12 item 4: unbounded growth for the
-# process lifetime, and dead-session DSIR entries pinned checkpointed
-# RDDs until the exact key recurred). 32 distinct (fingerprint, params)
-# models is far beyond any single driver's working set; the DSIR sweep
-# additionally drops entries whose session has stopped.
-_MEMO_CAP = 32
-
-
-def _session_stopped(s) -> bool:
-    try:
-        return s.sparkContext._jsc is None
-    except Exception:
-        return True
-
-
-def _memo_put(memo: OrderedDict, key: tuple, value, session_at=None) -> None:
-    """LRU insert: evict dead-session entries first (when ``session_at``
-    names the tuple slot holding the owning SparkSession), then the
-    least-recent past the cap."""
-    if session_at is not None:
-        for k in [
-            k for k, v in memo.items() if _session_stopped(v[session_at])
-        ]:
-            del memo[k]
-    memo[key] = value
-    memo.move_to_end(key)
-    while len(memo) > _MEMO_CAP:
-        memo.popitem(last=False)
-
-
-def _memo_get(memo: OrderedDict, key):
-    if key is None:
-        return None
-    v = memo.get(key)
-    if v is not None:
-        memo.move_to_end(key)
-    return v
-
-
-def _clf_memo_key(docs: DataFrame, *params) -> tuple | None:
-    import os
-
-    files = tuple(sorted(docs.inputFiles()))
-    if not files:
-        return None
-    mtimes = []
-    for f in files:
-        p = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            mtimes.append(os.path.getmtime(p))
-        except OSError:
-            return None
-    return (files, tuple(mtimes), docs.semanticHash(), params)
-
-
 def _clf_features(docs: DataFrame, dims: int = CLF_DIMS) -> DataFrame:
     """(doc_id, dim, comp_q): the classifier's design matrix — the
     :func:`text.hash_embed` hashed TF-IDF vector plus an intercept row
@@ -1140,32 +1066,37 @@ def quality_clf(
     corpus afterwards is map-side against the final weights.
     """
     labels = _clf_labels(docs, target_where)
-    key = _clf_memo_key(
-        docs, "full", target_where, dims, n_iter, lr_num, lr_den,
-        max_train_docs,
+    pinned = []
+
+    def train() -> dict[int, int]:
+        # bounded-sample contract, ENFORCED (the lsh_recall_eval
+        # discipline): full-batch GD over the whole corpus is never the
+        # right call at real scale — train on a sample
+        # (quality_clf_sampled / corpus.hash_sample) and score the full
+        # corpus with the frozen weights instead
+        n = docs.count()
+        if n > max_train_docs:
+            raise ValueError(
+                f"quality_clf trains full-batch over {n} docs "
+                f"(> max_train_docs={max_train_docs}); train on a sample "
+                f"(quality_clf_sampled, or corpus.hash_sample + the frozen "
+                f"weights), or raise max_train_docs to acknowledge the cost"
+            )
+        pinned.append(_clf_features(docs, dims).localCheckpoint(eager=True))
+        return _clf_gd(pinned[0], labels, n, dims, n_iter, lr_num, lr_den)
+
+    # trained weights are exact-int64 deterministic, so they are reused
+    # for the same input and params (VERDICT r11 item 4: the clf family
+    # re-ran the identical ~3-11 s train per bench pass otherwise)
+    key = memo.frame_key(
+        docs, "full", target_where, dims, n_iter, lr_num, lr_den, max_train_docs
     )
-    w = _memo_get(_CLF_WEIGHTS_MEMO, key)
-    if w is not None:
-        # frozen-weight replay: one fused scoring pass — no count, no
-        # checkpoint, no GD jobs, no (doc, dim) vector materialization
-        return _clf_score_frozen(docs, labels, w, dims)
-    # bounded-sample contract, ENFORCED (the lsh_recall_eval discipline):
-    # full-batch GD over the whole corpus is never the right call at real
-    # scale — train on a sample (quality_clf_sampled / corpus.hash_sample)
-    # and score the full corpus with the frozen weights instead
-    n = docs.count()
-    if n > max_train_docs:
-        raise ValueError(
-            f"quality_clf trains full-batch over {n} docs "
-            f"(> max_train_docs={max_train_docs}); train on a sample "
-            f"(quality_clf_sampled, or corpus.hash_sample + the frozen "
-            f"weights), or raise max_train_docs to acknowledge the cost"
-        )
-    feats = _clf_features(docs, dims).localCheckpoint(eager=True)
-    w = _clf_gd(feats, labels, n, dims, n_iter, lr_num, lr_den)
-    if key is not None:
-        _memo_put(_CLF_WEIGHTS_MEMO, key, w)
-    return _clf_score(feats, labels, w)
+    w = memo.get_or_compute("clf_weights", key, docs.sparkSession, train)
+    if pinned:
+        return _clf_score(pinned[0], labels, w)
+    # frozen-weight replay: one fused scoring pass — no count, no
+    # checkpoint, no GD jobs, no (doc, dim) vector materialization
+    return _clf_score_frozen(docs, labels, w, dims)
 
 
 def _clf_labels(docs: DataFrame, target_where: str) -> DataFrame:
@@ -1175,6 +1106,17 @@ def _clf_labels(docs: DataFrame, target_where: str) -> DataFrame:
             f"CAST(CASE WHEN {target_where} THEN 1 ELSE 0 END AS BIGINT)"
         ).alias("y"),
     )
+
+
+# Loops that run one tiny-aggregate job per step (the BPE merge loop, the
+# classifier's GD iterations): AQE's per-query replanning and a 32-way
+# shuffle add ~0.25 s/job of pure overhead on frames bounded by the step's
+# output, so both are scoped off for the loop — one small partition at any
+# input size.
+_TINY_JOB_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
 
 
 def _clf_gd(
@@ -1191,15 +1133,7 @@ def _clf_gd(
     gradient collect; ``n`` is the training-doc count entering the
     denominator. Returns the frozen integer weight map."""
     w: dict[int, int] = {d: 0 for d in range(-1, int(dims))}
-    spark = feats.sparkSession
-    conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "1")
-    try:
+    with memo.scoped_conf(feats.sparkSession, _TINY_JOB_CONF):
         den = int(lr_den) * int(n) * QUANT
         for _ in range(int(n_iter)):
             margins = (
@@ -1219,9 +1153,6 @@ def _clf_gd(
             )
             for row in grads:
                 w[int(row.dim)] -= (int(lr_num) * int(row.S)) // den
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
     return w
 
 
@@ -1339,30 +1270,29 @@ def quality_clf_sampled(
     corpus-sized materialization anywhere."""
     feats = _clf_features(docs, dims)
     labels = _clf_labels(docs, target_where)
-    key = _clf_memo_key(
+
+    def train() -> dict[int, int]:
+        cut = F.pmod(
+            md5_hash60(F.col("doc_id").cast("string")), F.lit(QUANT)
+        ) < F.lit(int(float(sample_rate) * QUANT))
+        train_ids = docs.where(cut).select("doc_id")
+        n = train_ids.count()
+        if n > max_train_docs:
+            raise ValueError(
+                f"quality_clf_sampled: the {sample_rate} sample still holds "
+                f"{n} docs (> max_train_docs={max_train_docs}); lower the rate"
+            )
+        tfeats = feats.join(F.broadcast(train_ids), "doc_id").localCheckpoint(
+            eager=True
+        )
+        tlabels = labels.join(F.broadcast(train_ids), "doc_id")
+        return _clf_gd(tfeats, tlabels, n, dims, n_iter, lr_num, lr_den)
+
+    key = memo.frame_key(
         docs, "sampled", float(sample_rate), target_where, dims, n_iter,
         lr_num, lr_den, max_train_docs,
     )
-    w = _memo_get(_CLF_WEIGHTS_MEMO, key)
-    if w is not None:
-        return _clf_score_frozen(docs, labels, w, dims)
-    cut = F.pmod(md5_hash60(F.col("doc_id").cast("string")), F.lit(QUANT)) < F.lit(
-        int(float(sample_rate) * QUANT)
-    )
-    train_ids = docs.where(cut).select("doc_id")
-    n = train_ids.count()
-    if n > max_train_docs:
-        raise ValueError(
-            f"quality_clf_sampled: the {sample_rate} sample still holds "
-            f"{n} docs (> max_train_docs={max_train_docs}); lower the rate"
-        )
-    tfeats = feats.join(F.broadcast(train_ids), "doc_id").localCheckpoint(
-        eager=True
-    )
-    tlabels = labels.join(F.broadcast(train_ids), "doc_id")
-    w = _clf_gd(tfeats, tlabels, n, dims, n_iter, lr_num, lr_den)
-    if key is not None:
-        _memo_put(_CLF_WEIGHTS_MEMO, key, w)
+    w = memo.get_or_compute("clf_weights", key, docs.sparkSession, train)
     # the corpus-sized feature frame was never materialized - score the
     # full corpus with the fused frozen-weight pass instead of replaying
     # the (doc, dim) vector build
@@ -2064,18 +1994,8 @@ def _bpe_merge_frame(spark, merges: list) -> DataFrame:
 #: driver kernel (same guarded-fast-path contract as
 #: components.MAX_DRIVER_EDGES): driver state is O(vocab · avg_len) — a
 #: 100k-word vocab is a few tens of MB — while the executor-resident loop
-#: pays ~1 job per accepted-merge batch. Env override is read at CALL time
-#: (ADVICE r14 item 4) so in-session A/B toggling works; <= 0 forces the
-#: distributed path (what the equality tests use).
+#: pays ~1 job per accepted-merge batch.
 BPE_DRIVER_VOCAB = 100_000
-
-
-def _bpe_driver_vocab_guard() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB", str(BPE_DRIVER_VOCAB))
-    )
 
 
 def bpe_train_distributed(
@@ -2114,11 +2034,11 @@ def bpe_train_distributed(
     corpus-sized word-count stage; only the Zipf-bounded vocab iterates.
 
     r15: vocabularies at or below ``max_driver_vocab`` (default
-    :data:`BPE_DRIVER_VOCAB`, env ``SPARK_GRAFT_BPE_DRIVER_VOCAB`` read at
-    call time; <= 0 forces distributed) route to the shared driver kernel
-    off the already-counted vocab — the components-guard contract: the
-    word-frequency stage is distributed either way, only the Zipf-bounded
-    merge loop moves, and the merge table is bit-identical.
+    :data:`BPE_DRIVER_VOCAB`; <= 0 forces distributed) route to the
+    shared driver kernel off the already-counted vocab — the
+    components-guard contract: the word-frequency stage is distributed
+    either way, only the Zipf-bounded merge loop moves, and the merge
+    table is bit-identical.
 
     r11: ``merge_batch`` (default 8) amortizes the dispatch floor — up to
     that many merges run as CHAINED folds in ONE job, with per-step
@@ -2128,7 +2048,7 @@ def bpe_train_distributed(
     pinned by pytest equality on the Sennrich worked example and the
     driver corpus (tests/test_round11.py). Equally load-bearing: each
     round's projections are built as ONE selectExpr SQL string
-    (symbols escaped via ``_sql_str``) — the Column-algebra spelling
+    (symbols spliced in via ``sql_str``) — the Column-algebra spelling
     spent ~250 ms/round on driver-side Py4J chatter, dwarfing the fold
     itself. Measured at sf0.1 (30 merges): sequential loop 5.7 s /
     30 jobs → batched 2.3 s / 24 jobs (merge chains bound acceptance:
@@ -2153,10 +2073,7 @@ def bpe_train_distributed(
     # materializes the word-count table and returns its size (the
     # components-loop trick)
     n_rows = vocab.count()
-    guard = (
-        _bpe_driver_vocab_guard() if max_driver_vocab is None
-        else max_driver_vocab
-    )
+    guard = BPE_DRIVER_VOCAB if max_driver_vocab is None else max_driver_vocab
     if guard > 0 and n_rows <= guard:
         # Small-vocab fast path (r15, VERDICT r14 item 6 — the
         # components-style guard): the merge loop is driver-bounded by the
@@ -2220,19 +2137,7 @@ def bpe_train_distributed(
         )
 
     merges: list[tuple[int, str, str, int]] = []
-    # the merge loop issues one tiny-aggregate job per merge; AQE's
-    # per-query replanning and a 32-way shuffle add ~0.25 s/job of pure
-    # overhead on a delta frame bounded by #changed-pairs. Scope both off
-    # for the loop (restored in the finally) — the deltas stay one small
-    # partition at any vocab size.
-    conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "1")
-    try:
+    with memo.scoped_conf(spark, _TINY_JOB_CONF):
         if int(merge_batch) > 1:
             _run_merge_loop_batched(
                 vocab, counts, heap, merges, int(n_merges), int(merge_batch)
@@ -2241,9 +2146,6 @@ def bpe_train_distributed(
             _run_merge_loop(
                 vocab, counts, heap, merges, int(n_merges), _adj_pairs
             )
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
     return spark.createDataFrame(
         merges, "rank long, left string, right string, pair_count long"
     )
@@ -2252,25 +2154,14 @@ def bpe_train_distributed(
 _TAGGED_PAIR_T = "array<struct<m:int,l:string,r:string,d:long>>"
 
 
-def _sql_str(s: str) -> str:
-    """A corpus symbol as a Spark SQL string literal. The batched loop
-    builds each round's whole projection as ONE selectExpr string (the
-    Column-algebra spelling costs ~250 ms/round of Py4J chatter on a
-    31-word vocab where the actual fold is microseconds), so symbols DO
-    enter SQL text here — escaped for Spark's default backslash-escaping
-    parser. Round-tripped on quote/backslash/unicode symbols in
-    tests/test_round11.py."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _bpe_fold_step_sql(prev: str, left: str, right: str) -> str:
     """One BPE merge as a left-to-right fold, as SQL text over the plain
     column ``prev`` — same semantics as the sequential loop's Column fold
     (merged token can never equal ``left``, so a fresh merge never
     re-merges in the same pass; ``get`` is 0-based and NULL-safe on the
     empty acc)."""
-    lit_l, lit_r = _sql_str(left), _sql_str(right)
-    lit_m = _sql_str(left + right)
+    lit_l, lit_r = sql_str(left), sql_str(right)
+    lit_m = sql_str(left + right)
     return (
         f"aggregate({prev}, CAST(array() AS array<string>), (acc, x) ->"
         f" CASE WHEN get(acc, size(acc) - 1) <=> {lit_l} AND x = {lit_r}"

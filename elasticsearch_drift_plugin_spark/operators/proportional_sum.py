@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
+from ..functions.sql_literal import sql_str
 from ..functions.time import (
     calendar_interval_expr,
     floor_fixed_ms,
@@ -60,15 +62,10 @@ def _qid(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _qstr(s: str) -> str:
-    """A SQL string literal (error messages embed caller column names)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _ms_sql(col_sql: str, dtype: T.DataType) -> str:
     """SQL-text twin of :func:`functions.time.to_epoch_ms` — the whole
     operator prefix is built as SQL strings since r15 so construction is
-    ONE parse instead of hundreds of py4j round trips (the BPE ``_sql_str``
+    ONE parse instead of hundreds of py4j round trips (the BPE merge-loop
     lesson; ~0.25 s of driver latency per psum construction measured)."""
     if isinstance(dtype, T.TimestampType):
         return f"unix_millis({col_sql})"
@@ -620,14 +617,14 @@ def _prepare_flows(df, start_col, end_col, value_col, sampling_col, p, validate)
     if validate:
         s = _check_sql(
             f"({s}) >= 0",
-            f"concat({_qstr(f'field [{start_col}] must be >= 0, got ')},"
+            f"concat({sql_str(f'field [{start_col}] must be >= 0, got ')},"
             f" CAST(({s}) AS STRING))",
             s,
             "BIGINT",
         )
         e = _check_sql(
             f"(({e}) >= 0) AND (({e}) >= ({s}))",
-            f"concat({_qstr(f'field [{end_col}] must be >= 0 and >= [{start_col}], got ')},"
+            f"concat({sql_str(f'field [{end_col}] must be >= 0 and >= [{start_col}], got ')},"
             f" CAST(({e}) AS STRING))",
             e,
             "BIGINT",
@@ -869,11 +866,6 @@ def _sweep_fixed(
 SWEEP_AUTO_FANOUT = 500
 _AUTO_SAMPLE_ROWS = 1024
 
-# (applicationId, plan semanticHash, start_col, end_col) -> avg width ms.
-# Same rationale as dedup._HOT_BLOCK_MEMO: repeated runs of the same query
-# (bench best-of-N, dashboard refresh) pay the sample job once.
-_WIDTH_MEMO: dict = {}
-
 
 def _estimated_fanout(
     df: DataFrame, start_col: str, end_col: str, step_ms: int,
@@ -883,15 +875,11 @@ def _estimated_fanout(
     O(1)-result control-plane job behind ``strategy='auto'``. A head sample
     (LocalLimit pushes into the scan, so only the first partition(s) are
     read) is deliberately cheap rather than uniform: the decision only needs
-    the order of magnitude, and a wrong guess changes speed, not results."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        start_col,
-        end_col,
-    )
-    width = _WIDTH_MEMO.get(key)
-    if width is None:
+    the order of magnitude, and a wrong guess changes speed, not results.
+    Memoized, so repeated runs of the same query (bench best-of-N,
+    dashboard refresh) pay the sample job once."""
+
+    def sample_width() -> float:
         # probe the un-widened twin when the source was repartitioned for
         # downstream parallelism (sources.flows.widen_narrow_scan): a
         # LocalLimit cannot push below a round-robin Exchange, so the head
@@ -909,8 +897,10 @@ def _estimated_fanout(
         # the driver — bounded by sample_rows either way
         rows = src.selectExpr(f"(({e}) - ({s})) AS __w").take(sample_rows)
         vals = [r["__w"] for r in rows if r["__w"] is not None]
-        width = float(sum(vals)) / len(vals) if vals else 0.0
-        _WIDTH_MEMO[key] = width
+        return float(sum(vals)) / len(vals) if vals else 0.0
+
+    key = memo.frame_key(df, start_col, end_col, int(sample_rows))
+    width = memo.get_or_compute("psum_width", key, df.sparkSession, sample_width)
     return width / float(step_ms)
 
 

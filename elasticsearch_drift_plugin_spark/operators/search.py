@@ -689,18 +689,22 @@ def phrase_suggest(
     # Arrow literal frame (ADVICE r14 item 2): the plain-tuple path decodes
     # through a Python-RDD scan that spawns a Python worker on every
     # action; phrase_rows is the largest literal frame in the module
-    # (cand_size**len(probe) rows).
-    import pandas as pd
+    # (cand_size**len(probe) rows). Empty when a probe slot has no
+    # candidate within max_edits.
+    if phrase_rows:
+        import pandas as pd
 
-    scored = spark.createDataFrame(
-        pd.DataFrame(
-            phrase_rows,
-            columns=[f"t{i}" for i in range(n)]
-            + [f"cb{i}" for i in range(n - 1)]
-            + [f"cu{i}" for i in range(n - 1)],
-        ),
-        schema=schema,
-    )
+        scored = spark.createDataFrame(
+            pd.DataFrame(
+                phrase_rows,
+                columns=[f"t{i}" for i in range(n)]
+                + [f"cb{i}" for i in range(n - 1)]
+                + [f"cu{i}" for i in range(n - 1)],
+            ),
+            schema=schema,
+        )
+    else:
+        scored = spark.createDataFrame([], schema)
     score = None
     for i in range(n - 1):
         lp = F.floor(

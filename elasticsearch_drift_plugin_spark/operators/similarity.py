@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.vectors import dot, l2_norm, lit_vec
 from ..sources.flows import load_table, pin_result
 
@@ -145,42 +146,32 @@ N_CENTROIDS = 16
 NPROBE = 4
 
 
-# (applicationId, plan semanticHash, n_centroids, id_col) -> centroid list.
-# Same rationale as proportional_sum._WIDTH_MEMO: the seed collect is a
-# bounded O(n_centroids · dim) index artifact, deterministic in (input,
-# params); repeated constructions of the same query (bench best-of-N,
-# rank_eval building probe + truth over one corpus) pay the job once.
-_SEED_MEMO: dict = {}
-
-
 def _seed_centroids(emb: DataFrame, n_centroids: int, id_col: str = "vec_id"):
     """Deterministic one-pass IVF: the ``n_centroids`` lowest-id vectors act
     as cell centroids (no Lloyd iterations, so the oracle can reproduce the
     index exactly). Collecting them is the broadcast-small-dim pattern:
-    O(n_centroids · dim) bytes regardless of corpus size."""
-    key = (
-        emb.sparkSession.sparkContext.applicationId,
-        emb.semanticHash(),
-        int(n_centroids),
-        id_col,
-    )
-    cached = _SEED_MEMO.get(key)
-    if cached is not None:
-        return cached
-    rows = (
-        emb.where(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("cid"), "embedding")
-        .collect()
-    )
-    cents = []
-    for r in sorted(rows, key=lambda r: r["cid"]):
-        vec = [float(x) for x in r["embedding"]]
-        acc = 0.0
-        for x in vec:  # sequential fold == the engines' SUM order
-            acc += x * x
-        cents.append((int(r["cid"]), vec, acc**0.5))
-    _SEED_MEMO[key] = cents
-    return cents
+    O(n_centroids · dim) bytes regardless of corpus size. Memoized: the
+    seeds are a bounded index artifact, so repeated constructions over one
+    corpus (bench best-of-N, rank_eval building probe + truth) pay the
+    job once."""
+
+    def collect_seeds():
+        rows = (
+            emb.where(F.col(id_col) < n_centroids)
+            .select(F.col(id_col).alias("cid"), "embedding")
+            .collect()
+        )
+        cents = []
+        for r in sorted(rows, key=lambda r: r["cid"]):
+            vec = [float(x) for x in r["embedding"]]
+            acc = 0.0
+            for x in vec:  # sequential fold == the engines' SUM order
+                acc += x * x
+            cents.append((int(r["cid"]), vec, acc**0.5))
+        return cents
+
+    key = memo.frame_key(emb, int(n_centroids), id_col)
+    return memo.get_or_compute("ivf_seeds", key, emb.sparkSession, collect_seeds)
 
 
 _V_DOUBLE_SQL = "transform(embedding, x -> CAST(x AS DOUBLE))"
@@ -221,38 +212,27 @@ def ivf_assign(
     )
 
 
-# (applicationId, plan semanticHash, id_col, max) -> collected query rows.
-# Bounded probe-side collect (<= max_query_rows vectors), same memo
-# rationale as _SEED_MEMO.
-_QVEC_MEMO: dict = {}
-
-
 def _collect_query_vecs(
     queries: DataFrame, id_col: str, max_query_rows: int
 ):
     """Collect the (bounded) probe side as ``[(qid, __v)]`` rows sorted by
     id, or None when it exceeds ``max_query_rows`` (caller falls back to
-    the broadcast-join path)."""
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        id_col,
-        int(max_query_rows),
-    )
-    if key in _QVEC_MEMO:
-        return _QVEC_MEMO[key]
-    rows = (
-        queries.select(
-            F.col(id_col).alias("qid"), F.expr(_V_DOUBLE_SQL).alias("__v")
+    the broadcast-join path). Memoized like :func:`_seed_centroids`."""
+
+    def collect_rows():
+        rows = (
+            queries.select(
+                F.col(id_col).alias("qid"), F.expr(_V_DOUBLE_SQL).alias("__v")
+            )
+            .limit(int(max_query_rows) + 1)
+            .collect()
         )
-        .limit(int(max_query_rows) + 1)
-        .collect()
-    )
-    out = None if len(rows) > max_query_rows else sorted(
-        rows, key=lambda r: r["qid"]
-    )
-    _QVEC_MEMO[key] = out
-    return out
+        if len(rows) > max_query_rows:
+            return None
+        return sorted(rows, key=lambda r: r["qid"])
+
+    key = memo.frame_key(queries, id_col, int(max_query_rows))
+    return memo.get_or_compute("query_vecs", key, queries.sparkSession, collect_rows)
 
 
 def _assigned_cells(emb, cents, id_col="vec_id", payload=()):

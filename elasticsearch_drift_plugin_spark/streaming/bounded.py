@@ -25,14 +25,15 @@ harness — production uses a Delta/parquet sink with the same dedup.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..operators.geo import geotile_grid_sql
 from ..operators.sessionize import sessionize_sql
 from ..oracle import psum_oracle_sql
@@ -47,30 +48,18 @@ from .proportional_sum_stream import proportional_sum_stream
 HOUR = 3_600_000
 
 
-#: Default shuffle-partition count for bounded replays. A stateful
+#: Shuffle-partition count for bounded replays. A stateful
 #: streaming agg creates (and commits, per micro-batch) one state store per
 #: shuffle partition; the replay tables are result-sized, so one store is
 #: the floor (r15: minimal stateful replay 0.89 s at 2 partitions /
-#: 0.70 s at 1). The env override is read at CALL time (ADVICE r14
-#: item 4) so in-session A/B toggling works.
+#: 0.70 s at 1).
 REPLAY_SHUFFLE_PARTITIONS = 1
 
 
-def _replay_shuffle_partitions() -> int:
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_REPLAY_SHUFFLE_PARTITIONS",
-            str(REPLAY_SHUFFLE_PARTITIONS),
-        )
-    )
-
-# spark.sql.shuffle.partitions is SESSION-global: two concurrent bounded
-# replays could interleave set/restore and leave the session pinned at the
-# replay value. The lock serializes replays (set → run → restore is atomic).
-# A BATCH query planned on the same session while a replay holds the lock
-# still sees the reduced value — the replay harness is single-session test
-# gear; production streams own their session and conf.
-_REPLAY_LOCK = threading.Lock()
+def _has_watermark(df: DataFrame) -> bool:
+    # tree lines are "<branch marks><~ if streaming>NodeName ..."
+    tree = df._jdf.queryExecution().analyzed().treeString()
+    return re.search(r"^[\s:|+~-]*EventTimeWatermark\b", tree, re.M) is not None
 
 
 def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -78,17 +67,24 @@ def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
     return the memory-sink table (unique name per run; the query is awaited
     and stopped before returning).
 
-    The replay pins a SMALL ``spark.sql.shuffle.partitions`` for the
-    query's lifetime (restored after): a stateful streaming agg creates one
-    state store per shuffle partition and commits each per micro-batch, so
-    a bounded replay at session default (32) pays ~32 store
-    open/commit/fsync cycles for a result-sized table — pure fixed cost,
-    no parallelism won. Production long-lived streams size this to their
-    real key cardinality via their own session conf; this knob only shapes
-    the bounded test/gate harness (r14: measured floor of a minimal
-    stateful replay 0.85 s at 8 partitions / 0.75 s at 2 — the remaining
-    ~0.7 s is query start/commit/stop machinery, partition-count
-    invariant; env-overridable for A/B).
+    The replay scopes two session confs to the query's lifetime:
+
+    - ``spark.sql.shuffle.partitions`` = :data:`REPLAY_SHUFFLE_PARTITIONS`:
+      a stateful streaming agg creates one state store per shuffle
+      partition and commits each per micro-batch, so a bounded replay at
+      session default (32) pays ~32 store open/commit/fsync cycles for a
+      result-sized table — pure fixed cost, no parallelism won. Production
+      long-lived streams size this to their real key cardinality via their
+      own session conf.
+    - no-data micro-batches off (r15, ~0.25 s/replay of start/commit
+      machinery), except in append mode over a plan with an event-time
+      watermark. Complete-mode sinks are overwritten with the full
+      aggregation each data batch, stateless append sinks are map-only,
+      and the update-mode sessionize replay runs without an idle timeout,
+      so for them an empty batch can never add or change sink rows. A
+      watermarked append replay emits the rows the last data batch's
+      watermark finalized only on the following no-data batch, so it
+      keeps the session setting.
     """
     spark = stream_df.sparkSession
     name = f"__bounded_{uuid.uuid4().hex[:12]}"
@@ -102,28 +98,10 @@ def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
     # guarantee and must stay.
     ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     ckpt = os.path.join(ckpt_base, f"ckpt_{name}")
-    with _REPLAY_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_nodata = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled"
-        )
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_replay_shuffle_partitions())
-        )
-        # Skip the trailing NO-DATA micro-batch (r15, ~0.25 s/replay of
-        # start/commit machinery): every replay operator emits its final
-        # rows on DATA batches — complete-mode sinks are overwritten with
-        # the full aggregation each batch, append sinks are stateless
-        # map-only, and the sessionize replay runs without an idle timeout
-        # (open sessions emit with open=true on the data batch; the
-        # collapse step already folds them) — so an empty batch can never
-        # add or change sink rows. Scoped to the bounded replay and
-        # restored; production streams that use event-time timeouts or
-        # watermark-closed emissions need no-data batches and keep the
-        # session default.
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
+    settings = {"spark.sql.shuffle.partitions": str(REPLAY_SHUFFLE_PARTITIONS)}
+    if output_mode != "append" or not _has_watermark(stream_df):
+        settings["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with memo.scoped_conf(spark, settings):
         try:
             q = (
                 stream_df.writeStream.outputMode(output_mode)
@@ -138,10 +116,6 @@ def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
             finally:
                 q.stop()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-            )
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 

@@ -446,11 +446,53 @@ def test_bpe_batched_nasty_symbols(spark):
 
 
 def test_sql_str_escaping_round_trips(spark):
-    from elasticsearch_drift_plugin_spark.operators.corpus import _sql_str
+    """Symbols and column names enter SQL text through ``sql_str``; the
+    literal must read back unchanged in both parser modes."""
+    from elasticsearch_drift_plugin_spark.functions.sql_literal import sql_str
+    from elasticsearch_drift_plugin_spark.memo import scoped_conf
 
-    for s in ["a'b", "a\\b", "a\\'b", "é中", "a\\\\b''"]:
-        got = spark.sql(f"SELECT {_sql_str(s)} AS v").collect()[0]["v"]
-        assert got == s, (s, got)
+    for escaped in ("false", "true"):
+        with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
+            for s in ["", "ab", "a'b", "a\\b", "a\\'b", "é中", "a\\\\b''", "'", "\\"]:
+                got = spark.sql(f"SELECT {sql_str(s)} AS v").collect()[0]["v"]
+                assert got == s, (escaped, s, got)
+
+
+def test_hostile_symbol_and_column_name_in_both_parser_modes(spark):
+    """A BPE symbol and a column name holding a quote, a backslash and a
+    non-ASCII character reach SQL text intact under both settings of
+    ``spark.sql.parser.escapedStringLiterals``."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from elasticsearch_drift_plugin_spark import proportional_sum
+    from elasticsearch_drift_plugin_spark.memo import scoped_conf
+    from elasticsearch_drift_plugin_spark.operators.corpus import (
+        bpe_train,
+        bpe_train_distributed,
+    )
+
+    docs = spark.createDataFrame([("d'o d'o d'o a\\b a\\b éé éé éé",)] * 3, "text string")
+    driver = [tuple(r) for r in bpe_train(docs, n_merges=6).collect()]
+    name = "st'a\\rté"
+    bad = spark.createDataFrame(
+        [(-5, 10, 1.0)],
+        T.StructType([
+            T.StructField(name, T.LongType()),
+            T.StructField("end_ms", T.LongType()),
+            T.StructField("value", T.DoubleType()),
+        ]),
+    )
+    for escaped in ("false", "true"):
+        with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
+            dist = bpe_train_distributed(
+                docs, n_merges=6, merge_batch=8, max_driver_vocab=0
+            )
+            assert [tuple(r) for r in dist.collect()] == driver, escaped
+            out = proportional_sum(bad, name, "end_ms", "value", interval=10, start=0, end=100)
+            with pytest.raises(Exception, match=re.escape(f"field [{name}] must be >= 0")):
+                out.collect()
 
 
 def test_date_math_compiles_identically_in_both_engines(spark):

@@ -309,8 +309,9 @@ def test_clf_weight_memo_trains_once_per_input(spark, monkeypatch):
     """The clf family (quality_clf / clf_calibration / train_curate_clf)
     shares ONE deterministic train per (input fingerprint, params): the
     second call replays frozen weights (no GD), and the outputs are
-    byte-identical. Sampled training keys separately. In-memory frames
-    (no backing files) never memoize."""
+    byte-identical. Sampled training keys separately. Nondeterministic
+    frames never memoize."""
+    from elasticsearch_drift_plugin_spark import memo
     from elasticsearch_drift_plugin_spark.operators import corpus
 
     calls = {"n": 0}
@@ -321,7 +322,7 @@ def test_clf_weight_memo_trains_once_per_input(spark, monkeypatch):
         return real_gd(*a, **k)
 
     monkeypatch.setattr(corpus, "_clf_gd", counting_gd)
-    corpus._CLF_WEIGHTS_MEMO.clear()
+    memo.clear("clf_weights")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     first = corpus.quality_clf(docs).collect()
@@ -329,8 +330,8 @@ def test_clf_weight_memo_trains_once_per_input(spark, monkeypatch):
     again = corpus.quality_clf(docs).collect()
     assert calls["n"] == 1  # memo hit — no second train
     assert first == again
-    # a fresh load of the same table hits the same key (files+mtimes+
-    # semantic hash are load-stable)
+    # a fresh load of the same table hits the same key (files, sizes,
+    # mtimes and the semantic hash are load-stable)
     docs2 = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     corpus.quality_clf(docs2).collect()
     assert calls["n"] == 1
@@ -339,12 +340,15 @@ def test_clf_weight_memo_trains_once_per_input(spark, monkeypatch):
     assert calls["n"] == 2
     corpus.quality_clf_sampled(docs, sample_rate=0.5).collect()
     assert calls["n"] == 2
-    # an in-memory frame must NOT memoize (its data is not fingerprinted)
+    # a nondeterministic frame must NOT memoize (its rows are not pinned)
     mem = spark.createDataFrame(
         [(1, "alpha beta", "src0"), (2, "gamma delta", "src1")] * 3,
         "doc_id long, text string, source string",
     ).withColumn("doc_id", F.monotonically_increasing_id())
-    assert corpus._clf_memo_key(mem, "full") is None
+    assert memo.frame_key(mem, "full") is None
+    corpus.quality_clf(mem).collect()
+    corpus.quality_clf(mem).collect()
+    assert calls["n"] == 4
 
 
 # --- cumulative_cardinality on a zone-shifted FIXED grid (r12) --------------
@@ -526,7 +530,8 @@ def test_dsir_lambda_memo_fits_once_per_input(spark, monkeypatch):
     """dsir_weights / dsir_sample share ONE λ-model fit per (input
     fingerprint, params): the target-side gram aggregation runs once; a
     repeat call replays the checkpointed λ table and the outputs are
-    byte-identical. A stale-session entry is ignored."""
+    byte-identical. A stale-session entry is evicted."""
+    from elasticsearch_drift_plugin_spark import memo
     from elasticsearch_drift_plugin_spark.operators import corpus
 
     calls = {"n": 0}
@@ -537,7 +542,7 @@ def test_dsir_lambda_memo_fits_once_per_input(spark, monkeypatch):
         return real(df, buckets)
 
     monkeypatch.setattr(corpus, "_hashed_gram_counts", counting)
-    corpus._DSIR_LAM_MEMO.clear()
+    memo.clear("dsir_lambda")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     first = corpus.dsir_weights(docs).collect()
@@ -549,11 +554,14 @@ def test_dsir_lambda_memo_fits_once_per_input(spark, monkeypatch):
     # dsir_sample rides the same memo
     corpus.dsir_sample(docs).collect()
     assert calls["n"] == n_fit + 2
-    # a dead-session entry is treated as a miss, not a broken frame
-    (key, (sess, lam)), = corpus._DSIR_LAM_MEMO.items()
-    corpus._DSIR_LAM_MEMO[key] = (object(), lam)
+    # a dead-session entry is evicted and treated as a miss, not a broken
+    # frame
+    store = memo._STORE["dsir_lambda"]
+    (key, (sess, lam)), = store.items()
+    store[key] = (object(), lam)
     corpus.dsir_weights(docs).collect()
     assert calls["n"] == n_fit + 4  # re-fit: raw + target passes again
+    assert [s for s, _ in store.values()] == [spark]
 
 
 # --- fixed interval + time_zone (r12: the local-space grid) -----------------

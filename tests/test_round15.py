@@ -53,34 +53,16 @@ def test_bpe_driver_route_matches_distributed(spark):
     ]
 
 
-def test_bpe_guard_env_read_at_call_time(spark, monkeypatch):
-    """ADVICE r14 item 4 contract: the env override must be honored on the
-    call, not frozen at import."""
-    docs = _bpe_docs(spark)
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_VOCAB", "0")
-    forced = [
-        tuple(r) for r in bpe_train_distributed(docs, n_merges=6).collect()
-    ]
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_VOCAB", "100000")
-    routed = [
-        tuple(r) for r in bpe_train_distributed(docs, n_merges=6).collect()
-    ]
-    assert forced == routed
-
-
 # --- bench memo clearing (VERDICT r14 item 2) --------------------------
 
-def test_clear_result_memos_empties_every_memo(spark):
-    corpus = importlib.import_module(
-        "elasticsearch_drift_plugin_spark.operators.corpus"
-    )
-    dedup = importlib.import_module(
-        "elasticsearch_drift_plugin_spark.operators.dedup"
-    )
+def test_clear_result_memos_empties_every_memo(spark, tmp_path):
+    from elasticsearch_drift_plugin_spark import memo
+    from elasticsearch_drift_plugin_spark.sources.flows import load_table
+
     similarity = importlib.import_module(
         "elasticsearch_drift_plugin_spark.operators.similarity"
     )
-    # populate two of them through their public paths
+    # populate two result kinds through their public paths, and one scan
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(20)],
         "vec_id long, embedding array<float>",
@@ -90,17 +72,14 @@ def test_clear_result_memos_empties_every_memo(spark):
         [(0, 1000, 1.0)], "start_ms long, end_ms long, value double"
     )
     _psum_mod._estimated_fanout(df, "start_ms", "end_ms", 100)
-    assert similarity._SEED_MEMO and _psum_mod._WIDTH_MEMO
+    spark.range(3).write.parquet(f"{tmp_path}/region.parquet")
+    load_table(spark, str(tmp_path), "region")
+    assert memo._STORE["ivf_seeds"] and memo._STORE["psum_width"]
     clear_result_memos()
-    for memo in (
-        similarity._SEED_MEMO,
-        similarity._QVEC_MEMO,
-        _psum_mod._WIDTH_MEMO,
-        dedup._HOT_BLOCK_MEMO,
-        corpus._CLF_WEIGHTS_MEMO,
-        corpus._DSIR_LAM_MEMO,
-    ):
-        assert not memo
+    for kind in memo.RESULT_KINDS:
+        assert not memo._STORE.get(kind)
+    # loader scans are not job results and survive the clear
+    assert memo._STORE["scan"]
 
 
 # --- psum projection boundary gating (VERDICT r14 item 1) --------------
@@ -126,3 +105,49 @@ def test_psum_boundary_only_on_tz_paths(spark):
     assert [
         (r["key"], r["doc_count"], r["value"]) for r in utc.collect()
     ] == [(0, 1, 4.0), (100, 1, 4.0), (200, 1, 2.0)]
+
+
+# --- psum probe twin (ADVICE r15) ---------------------------------------
+
+def test_lineitem_probe_twin_gives_the_widened_width(spark, tmp_path):
+    """The un-widened probe twin holds the widened frame's rows: sampled
+    over the whole table, the average width is the same on both."""
+    from datetime import datetime, timedelta
+
+    from elasticsearch_drift_plugin_spark.sources.flows import lineitem_flows
+
+    rows = [
+        (k // 4, k % 4 + 1, datetime(2024, 1, 1) + timedelta(days=k % 90),
+         k * 7 % 200, float(k), k % 10, "AR"[k % 2], 1.0)
+        for k in range(600)
+    ]
+    spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_linenumber int, l_shipdate timestamp_ntz,"
+        " l_partkey long, l_extendedprice double, l_suppkey long,"
+        " l_returnflag string, l_quantity double",
+    ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
+    # one small file is a narrow scan, so the derivation widens it
+    df = lineitem_flows(spark, str(tmp_path))
+    twin = df._spark_graft_probe_twin
+    n = df.count()
+    assert twin.count() == n
+    widened = df.select("*")  # a new frame: no twin attribute, probes itself
+    assert not hasattr(widened, "_spark_graft_probe_twin")
+    args = ("start_ms", "end_ms", 86_400_000)
+    assert _psum_mod._estimated_fanout(
+        widened, *args, sample_rows=n
+    ) == _psum_mod._estimated_fanout(twin, *args, sample_rows=n)
+
+
+# --- phrase_suggest empty candidate slot (ADVICE r15) --------------------
+
+def test_phrase_suggest_slot_without_candidates_is_empty(spark):
+    from elasticsearch_drift_plugin_spark.operators.search import phrase_suggest
+
+    docs = spark.createDataFrame(
+        [(1, "fast data scan"), (2, "fast data")], "doc_id long, text string"
+    )
+    out = phrase_suggest(docs, probe=("qqqqqqqqqqqq", "data"), max_edits=1)
+    assert out.columns == ["rank", "phrase", "score_q"]
+    assert out.collect() == []

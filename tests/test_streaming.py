@@ -237,6 +237,26 @@ def test_bounded_replay_equals_batch(spark):
     assert len(got_sess) > 0
 
 
+def test_append_replay_emits_buckets_the_last_batch_finalized(spark, tmp_path):
+    """A watermarked append-mode replay: the one data batch moves the
+    watermark to BASE+5h-10m, and the buckets it finalizes are emitted by
+    the no-data batch that follows, which the replay must not skip."""
+    from elasticsearch_drift_plugin_spark.streaming.bounded import run_available_now
+
+    src = f"{tmp_path}/flows"
+    spark.createDataFrame(
+        [(BASE, BASE + 2 * HOUR, 8.0, None), (BASE + 4 * HOUR, BASE + 5 * HOUR, 3.0, None)],
+        SCHEMA,
+    ).coalesce(1).write.parquet(src)
+    agg = proportional_sum_stream(
+        spark.readStream.schema(SCHEMA).parquet(src),
+        "start_ms", "end_ms", "value", "sampling",
+        interval=HOUR, watermark_delay="10 minutes", quantize=6,
+    )
+    got = {r.key for r in run_available_now(agg, "append").collect()}
+    assert got == {BASE, BASE + HOUR, BASE + 2 * HOUR, BASE + 4 * HOUR}
+
+
 def test_batch_sessionize_golden(spark):
     from elasticsearch_drift_plugin_spark.operators.sessionize import sessionize
 

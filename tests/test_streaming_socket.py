@@ -53,26 +53,28 @@ class _Feed:
             self.srv.close()
 
 
-def _drain_until(q, want_inputs, timeout_s=60):
+def _drain_until(progress, q, want_inputs, timeout_s=60):
     """Socket batches arrive asynchronously — wait until the query's
-    OWN progress log shows ``want_inputs`` source rows processed
+    OWN progress events show ``want_inputs`` source rows processed
     (processAllAvailable does not apply: the socket source always
-    reports 'more may come'). Gating on ``recentProgress`` rather than
-    counting sink rows kills the r7 flake risk: if a wave splits across
+    reports 'more may come'). Gating on progress rather than counting
+    sink rows kills the r7 flake risk: if a wave splits across
     micro-batches, the sink briefly holds MORE update rows than one
     per wave and a row-count gate would release the next wave early
     (ADVICE r7). Progress is emitted after the batch commits — sink
-    side effects are durable by the time the count clears."""
+    side effects are durable by the time the count clears. The count
+    comes from the session's progress listener, not the bounded
+    ``recentProgress`` ring, which idle triggers evict batches from."""
     deadline = time.time() + timeout_s
     while time.time() < deadline:
-        done = sum(int(p["numInputRows"]) for p in q.recentProgress)
+        done = sum(progress.input_rows(q).values())
         if done >= want_inputs:
             return
         time.sleep(0.25)
     raise TimeoutError(f"query never processed {want_inputs} input rows")
 
 
-def test_counter_rate_over_live_socket(spark, tmp_path):
+def test_counter_rate_over_live_socket(spark, progress, tmp_path):
     from elasticsearch_drift_plugin_spark.streaming.counter_rate import (
         counter_rate_stream,
     )
@@ -99,11 +101,11 @@ def test_counter_rate_over_live_socket(spark, tmp_path):
     try:
         # wave 1: two in-order samples -> inc 0 + 5
         feed.send([(1, "s", DAY + 1000, 0.004), (2, "s", DAY + 2000, 0.005)])
-        _drain_until(q, 2)
+        _drain_until(progress, q, 2)
         # wave 2 (a later micro-batch): cum 14 -> counter 4 < 9 => reset,
         # inc 4; plus one cross-batch LATE sample that must drop loudly
         feed.send([(3, "s", DAY + 3000, 0.005), (4, "s", DAY + 1500, 0.009)])
-        _drain_until(q, 4)
+        _drain_until(progress, q, 4)
     finally:
         q.stop()
         feed.close()

@@ -35,13 +35,13 @@ def _wait_for(pred, timeout=120.0, poll=0.3):
     return False
 
 
-def _nonempty_batches(q):
-    """Progress events that actually ingested rows (idle triggers emit 0-row
-    progress records)."""
-    return [p for p in q.recentProgress if p and p.get("numInputRows", 0) > 0]
+def _nonempty_batches(progress, q):
+    """Ids of the batches that actually ingested rows (idle triggers emit
+    0-row progress records)."""
+    return [b for b, n in progress.input_rows(q).items() if n > 0]
 
 
-def test_psum_processing_time_trigger_multi_batch(spark):
+def test_psum_processing_time_trigger_multi_batch(spark, progress):
     """proportional_sum_stream under trigger(processingTime=...): the
     rate-micro-batch source emits a fixed row count PER TRIGGER, so reaching
     the expected aggregate state requires >=2 live micro-batches — asserted
@@ -110,7 +110,7 @@ def test_psum_processing_time_trigger_multi_batch(spark):
             "the processingTime trigger"
         )
         # >=2 micro-batches actually ingested rows under the live trigger
-        assert len(_nonempty_batches(q)) >= 2
+        assert _wait_for(lambda: len(_nonempty_batches(progress, q)) >= 2)
         # the event-time watermark advanced off the epoch once batches flowed
         def watermark_advanced():
             p = q.lastProgress
@@ -122,7 +122,7 @@ def test_psum_processing_time_trigger_multi_batch(spark):
         q.stop()
 
 
-def test_psum_processing_time_trigger_drops_late(spark, tmp_path):
+def test_psum_processing_time_trigger_drops_late(spark, progress, tmp_path):
     """Watermark correctness under a live trigger: after the watermark passes
     a bucket, a file landing later that credits it is dropped (the documented
     divergence from batch; batch replay reconciles)."""
@@ -157,7 +157,7 @@ def test_psum_processing_time_trigger_drops_late(spark, tmp_path):
         spark.createDataFrame(
             [(BASE, BASE + HOUR, 100.0, None)], SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
-        assert _wait_for(lambda: len(_nonempty_batches(q)) >= 2)
+        assert _wait_for(lambda: len(_nonempty_batches(progress, q)) >= 2)
         # give the trigger one more cycle to (not) emit the late update
         time.sleep(1.0)
         rows = spark.sql(
@@ -168,7 +168,7 @@ def test_psum_processing_time_trigger_drops_late(spark, tmp_path):
         q.stop()
 
 
-def test_flow_sessions_processing_time_trigger(spark, tmp_path):
+def test_flow_sessions_processing_time_trigger(spark, progress, tmp_path):
     """applyInPandasWithState sessionization under a live processingTime
     trigger: session merges within a micro-batch, then a later micro-batch
     closes the idle session and opens a new one — same assertions as the
@@ -217,7 +217,7 @@ def test_flow_sessions_processing_time_trigger(spark, tmp_path):
             )
 
         assert _wait_for(second_batch_done)
-        assert len(_nonempty_batches(q)) >= 2
+        assert _wait_for(lambda: len(_nonempty_batches(progress, q)) >= 2)
     finally:
         q.stop()
 
