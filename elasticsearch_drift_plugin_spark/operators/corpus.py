@@ -741,23 +741,24 @@ ORDER BY d.doc_id
 DSIR_BUCKETS = 8192
 
 
-def _hashed_gram_counts(docs: DataFrame, buckets: int = DSIR_BUCKETS) -> DataFrame:
-    """(doc_id, b, cnt): per-doc hashed n-gram bucket counts — DSIR's
-    feature map. Grams are unigrams + space-joined bigrams (a unigram can
-    never contain a space, so the two families can't collide), bucketed by
-    the cross-engine md5 hash mod ``buckets``. One map-side HOF projection
-    + explode + a (doc_id, b)-keyed count: narrow, no corpus self-join.
-    The scan is widened so the md5 battery parallelizes on single-split
-    samples (no-op at real scale)."""
+def _hashed_grams(docs: DataFrame, buckets: int = DSIR_BUCKETS) -> DataFrame:
+    """(…, b): one row per hashed n-gram of each doc, carrying every column
+    of ``docs`` except ``text`` — DSIR's feature map. Grams are unigrams +
+    space-joined bigrams (a unigram can never contain a space, so the two
+    families can't collide), bucketed by the cross-engine md5 hash mod
+    ``buckets``. One map-side HOF projection + explode: narrow, no corpus
+    self-join. The scan is widened so the md5 battery parallelizes on
+    single-split samples (no-op at real scale)."""
     from ..sources.flows import widen_narrow_scan
 
+    keys = [c for c in docs.columns if c != "text"]
     docs = widen_narrow_scan(docs, "doc_id")
     toks = docs.select(
-        "doc_id",
+        *keys,
         F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "").alias("__t"),
     )
     grams = toks.select(
-        "doc_id",
+        *keys,
         F.explode(
             F.concat(
                 F.col("__t"),
@@ -771,9 +772,7 @@ def _hashed_gram_counts(docs: DataFrame, buckets: int = DSIR_BUCKETS) -> DataFra
             )
         ).alias("g"),
     )
-    return grams.select(
-        "doc_id", (md5_hash60(F.col("g")) % F.lit(int(buckets))).alias("b")
-    ).groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("cnt"))
+    return grams.select(*keys, (md5_hash60(F.col("g")) % F.lit(int(buckets))).alias("b"))
 
 
 def dsir_weights(
@@ -787,59 +786,60 @@ def dsir_weights(
     ``Σ_b cnt_doc[b] · (ln p̂_t[b] − ln p̂_r[b])`` with add-one smoothing
     over ``buckets`` hash buckets. High ``dsir_q`` ⇒ the doc looks like
     the target domain; this is the standard public data-selection operator
-    for pre-training corpora (DSIR, Xie et al. 2023).
+    for pre-training corpora (DSIR, Xie et al. 2023). A doc whose
+    ``target_where`` is NULL is on neither side.
 
     Float discipline: each bucket's two log-probabilities are floored to
     1e-6 quanta INDEPENDENTLY (the ``bigram_lm_score`` convention), so the
     per-doc weight is an exact integer sum — cross-engine hashable.
 
-    Scale shape: the bucket tables are bounded by ``buckets`` (8k rows) —
-    each is aggregated once and PINNED (eager ``localCheckpoint``), so the
-    two corpus-scale gram passes (one per side) run exactly once for model
-    fitting; scoring replays the raw gram pass once more against the
-    broadcast λ table (recompute-over-persist is the honest choice for a
-    corpus-sized intermediate). The gram totals Nt/Nr are O(1) scalar
-    collects off the pinned tables. No corpus self-join anywhere.
+    Scale shape: the model is fitted by ONE gram pass over ``docs`` with a
+    side flag, summed per bucket into both sides' counts at once; the gram
+    totals Nt/Nr are whole-table window sums in the same plan, so ``log``
+    runs in the JVM and nothing is collected as a scalar. λ covers the
+    buckets the raw side hit, a table bounded by ``buckets`` (8k rows),
+    collected once through Arrow and kept as a literal frame. Scoring
+    replays the raw gram pass against the broadcast λ table
+    (recompute-over-persist is the honest choice for a corpus-sized
+    intermediate). No corpus self-join anywhere.
     """
     raw = docs.where(f"NOT ({target_where})")
-    doc_b = _hashed_gram_counts(raw, buckets)
-    # λ-table memo (r12, the quality-clf pattern): the fitted model is a
-    # BOUNDED `buckets`-row table, deterministic in (input, params) —
-    # dsir_weights + dsir_sample re-fit the identical model per session
-    # otherwise. The value is a session-bound checkpointed frame.
+    doc_b = (
+        _hashed_grams(raw.select("doc_id", "text"), buckets)
+        .groupBy("doc_id", "b")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    # λ memo: the fitted model is deterministic in (input, params), and
+    # dsir_weights + dsir_sample would re-fit the identical model otherwise
 
     def fit_lambda() -> DataFrame:
-        target = docs.where(target_where)
-        cr = (
-            doc_b.groupBy("b")
-            .agg(F.sum("cnt").alias("cr"))
-            .localCheckpoint(eager=True)
-        )
-        ct = (
-            _hashed_gram_counts(target, buckets)
+        sided = docs.select(
+            "doc_id", "text", F.expr(f"CAST(({target_where}) AS INT)").alias("__side")
+        ).where("__side IS NOT NULL")
+        # one partition after the bucket sum, so the totals' window needs
+        # no second exchange; SQL text, not Column algebra, for the λ
+        # expression (one parse instead of ~10 py4j calls per function)
+        per_b = (
+            _hashed_grams(sided, buckets)
             .groupBy("b")
-            .agg(F.sum("cnt").alias("ct"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("__side").alias("ct"))
+            .coalesce(1)
         )
-        n_t = ct.agg(F.sum("ct")).collect()[0][0] or 0
-        n_r = cr.agg(F.sum("cr")).collect()[0][0] or 0
-        bl = float(buckets)
-        return cr.join(ct, "b", "left").select(
-            "b",
-            (
-                F.floor(
-                    F.log(
-                        (F.coalesce("ct", F.lit(0)) + F.lit(1.0))
-                        / F.lit(float(n_t) + bl)
-                    )
-                    * F.lit(float(QUANT))
-                )
-                - F.floor(
-                    F.log((F.col("cr") + F.lit(1.0)) / F.lit(float(n_r) + bl))
-                    * F.lit(float(QUANT))
-                )
-            ).alias("lam_q"),
-        ).localCheckpoint(eager=True)
+        bl, q = float(buckets), float(QUANT)
+        lam = (
+            per_b.selectExpr(
+                "b", "ct", "n - ct AS cr",
+                "sum(ct) OVER () AS nt", "sum(n - ct) OVER () AS nr",
+            )
+            .where("cr > 0")
+            .selectExpr(
+                "b",
+                f"floor(ln((ct + 1.0D) / (nt + {bl}D)) * {q}D)"
+                f" - floor(ln((cr + 1.0D) / (nr + {bl}D)) * {q}D) AS lam_q",
+            )
+        )
+        # an Arrow table (even an empty one) lands as a LocalRelation
+        return docs.sparkSession.createDataFrame(lam.toArrow(), "b long, lam_q long")
 
     key = memo.frame_key(docs, target_where, int(buckets))
     lam = memo.get_or_compute("dsir_lambda", key, docs.sparkSession, fit_lambda)
@@ -993,21 +993,33 @@ CLF_DIMS = 64
 CLF_ITERS = 8
 CLF_LR_NUM = 1
 CLF_LR_DEN = 50
-# full-batch training holds a dims+1 Python weight dict and collects a
-# (dims+1)-row gradient per iteration — cheap — but the int64 gradient
-# accumulator (sum of comp_q * r, each ≤ 1e6 * 1e6) only has ~9e18/1e12
-# ≈ 9e6 docs of headroom, and a quality classifier never needs more than
-# a sample anyway. Enforced like dedup.MAX_EVAL_DOCS, not just documented.
+# Full-batch training holds an n × (dims+1) int64 matrix on the driver (52
+# MB at this cap); a quality classifier never needs more than a sample.
+# comp_q is tf·idf_q, |comp_q| ≤ ~9e6 on the sf0.1 documents, and each
+# gradient term is comp_q · r with |r| ≤ 1e6, so the int64 gradient sum has
+# ~1e6 docs of headroom at that magnitude. The driver kernel checks the
+# exact bound instead — max column Σ|X| · 1e6 before training, max row
+# Σ|X| · max|w| before every margin pass — and declines if a sum could
+# wrap; then, and over this cap, the distributed loop trains, where ANSI
+# mode raises on overflow. ``max_train_docs`` enforces the cap.
 MAX_CLF_TRAIN_DOCS = 100_000
+_I64_LIMIT = 2**63 - 1 - QUANT  # margin room for the hard-sigmoid's floor step
 
 
-def _clf_features(docs: DataFrame, dims: int = CLF_DIMS) -> DataFrame:
+def _clf_features(
+    docs: DataFrame, dims: int = CLF_DIMS, n_docs: int | None = None
+) -> DataFrame:
     """(doc_id, dim, comp_q): the classifier's design matrix — the
-    :func:`text.hash_embed` hashed TF-IDF vector plus an intercept row
-    (``dim = -1``, x = 1.0) per document, long-format integer quanta."""
-    from .text import hash_embed
+    :func:`text.hash_embed` hashed TF-IDF vector (without its output sort)
+    plus an intercept row (``dim = -1``, x = 1.0) per document, long-format
+    integer quanta. ``n_docs`` is ``docs.count()`` if the caller has it."""
+    from .text import _tfidf_contribs
 
-    feats = hash_embed(docs, dims=dims).select("doc_id", "dim", "comp_q")
+    feats = (
+        _tfidf_contribs(docs, dims, n_docs)
+        .groupBy("doc_id", "dim")
+        .agg(F.sum("c").cast("long").alias("comp_q"))
+    )
     icpt = docs.select(
         "doc_id",
         F.lit(-1).cast("long").alias("dim"),
@@ -1035,6 +1047,13 @@ def _hardsig_q(m12_sql: str, idiv: str = "div") -> str:
     )
 
 
+def _hardsig_np(m):
+    """:func:`_hardsig_q` over int64 margins: ``//`` floors, as the SQL does."""
+    import numpy as np
+
+    return np.clip(500000 + (m // 1000000) // 4, 0, QUANT)
+
+
 def quality_clf(
     docs: DataFrame,
     target_where: str = "source = 'src0'",
@@ -1057,16 +1076,16 @@ def quality_clf(
     replays bit-identically in SQL (:func:`quality_clf_sql` unrolls the
     iterations as MATERIALIZED CTEs).
 
-    Scale shape: the design matrix is one hashed-TF-IDF pass (train on a
-    bounded ``hash_sample`` at real scale — a quality classifier never
-    needs the full corpus; int64 gradient headroom also assumes a
-    ≲1e5-doc training sample), pinned once and reused by all iterations;
-    each iteration is ONE job (margins → residuals → 65-row gradient
-    collect); weights broadcast back as a literal map. Scoring the full
-    corpus afterwards is map-side against the final weights.
+    Scale shape: one hashed-TF-IDF pass builds the design matrix, collected
+    ONCE through Arrow; up to ``MAX_CLF_TRAIN_DOCS`` docs the GD iterations
+    and the scoring run on the driver over a dense int64 matrix
+    (:func:`_clf_gd_local`) and the scores return as a literal frame.
+    Larger inputs, and inputs whose int64 sums could wrap, train through
+    the distributed :func:`_clf_gd` and score map-side. At real scale train
+    on a bounded sample (:func:`quality_clf_sampled`).
     """
     labels = _clf_labels(docs, target_where)
-    pinned = []
+    design = []
 
     def train() -> dict[int, int]:
         # bounded-sample contract, ENFORCED (the lsh_recall_eval
@@ -1082,20 +1101,22 @@ def quality_clf(
                 f"(quality_clf_sampled, or corpus.hash_sample + the frozen "
                 f"weights), or raise max_train_docs to acknowledge the cost"
             )
-        pinned.append(_clf_features(docs, dims).localCheckpoint(eager=True))
-        return _clf_gd(pinned[0], labels, n, dims, n_iter, lr_num, lr_den)
+        feats = _clf_features(docs, dims, n)
+        w, d = _clf_train(feats, labels, n, dims, n_iter, lr_num, lr_den)
+        design.append(d)
+        return w
 
     # trained weights are exact-int64 deterministic, so they are reused
-    # for the same input and params (VERDICT r11 item 4: the clf family
-    # re-ran the identical ~3-11 s train per bench pass otherwise)
+    # for the same input and params (the clf family re-ran the identical
+    # train per bench pass otherwise)
     key = memo.frame_key(
         docs, "full", target_where, dims, n_iter, lr_num, lr_den, max_train_docs
     )
     w = memo.get_or_compute("clf_weights", key, docs.sparkSession, train)
-    if pinned:
-        return _clf_score(pinned[0], labels, w)
-    # frozen-weight replay: one fused scoring pass — no count, no
-    # checkpoint, no GD jobs, no (doc, dim) vector materialization
+    if design and design[0] is not None:
+        return _clf_score_local(docs.sparkSession, design[0], w, labels)
+    # frozen-weight replay (memo hit, distributed route): one fused
+    # scoring pass — no GD jobs, no (doc, dim) vector materialization
     return _clf_score_frozen(docs, labels, w, dims)
 
 
@@ -1108,11 +1129,110 @@ def _clf_labels(docs: DataFrame, target_where: str) -> DataFrame:
     )
 
 
+def _clf_train(feats, labels, n, dims, n_iter, lr_num, lr_den):
+    """Train the integer GD on the driver (:func:`_clf_gd_local`) up to
+    ``MAX_CLF_TRAIN_DOCS`` docs unless its int64 bound fails, else with the
+    distributed :func:`_clf_gd`. Returns (weights, driver design or None)."""
+    design = _clf_design(feats, labels, dims) if n <= MAX_CLF_TRAIN_DOCS else None
+    w = design and _clf_gd_local(design, n, dims, n_iter, lr_num, lr_den)
+    if w is not None:
+        return w, design
+    pinned = feats.localCheckpoint(eager=True)
+    return _clf_gd(pinned, labels, n, dims, n_iter, lr_num, lr_den), None
+
+
+def _clf_design(feats: DataFrame, labels: DataFrame, dims: int) -> dict | None:
+    """The training input on the driver from ONE Arrow collect of the
+    feature rows and the label rows (``dim`` NULL): the dense int64 ``X``
+    over the sorted doc ids (column 0 the intercept), cells summed like the
+    distributed per-doc sums; per doc the label-row count ``k`` and label
+    sum ``ysum``; the label rows ``row``/``y``; max row/column Σ|X|. NULL
+    doc ids join nothing in the distributed loop and are dropped. None if
+    summing the feature rows could wrap int64."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    null = F.lit(None).cast("long")
+    t = (
+        feats.select("doc_id", "dim", "comp_q", null.alias("y"))
+        .unionByName(labels.select("doc_id", null.alias("dim"), null.alias("comp_q"), "y"))
+        .where("doc_id IS NOT NULL")
+        .toArrow()
+    )
+    is_lab = pc.is_null(t["dim"])
+    ft, lt = t.filter(pc.invert(is_lab)), t.filter(is_lab)
+    comp_q, nf = ft["comp_q"].to_numpy(), ft.num_rows
+    if nf and max(-int(comp_q.min()), int(comp_q.max())) * nf >= 2**63:
+        return None
+    ids, inv = np.unique(
+        np.concatenate([ft["doc_id"].to_numpy(), lt["doc_id"].to_numpy()]), return_inverse=True
+    )
+    X, ysum = np.zeros((len(ids), int(dims) + 1), np.int64), np.zeros(len(ids), np.int64)
+    row, y = inv[nf:], lt["y"].to_numpy()
+    np.add.at(X, (inv[:nf], ft["dim"].to_numpy() + 1), comp_q)
+    np.add.at(ysum, row, y)
+    absx = np.abs(X)
+    return {
+        "ids": ids, "X": X, "row": row, "y": y, "ysum": ysum,
+        "k": np.bincount(row, minlength=len(ids)),
+        "row_abs": int(absx.sum(axis=1).max(initial=0)),
+        "col_abs": int(absx.sum(axis=0).max(initial=0)),
+    }
+
+
+def _clf_margins(design: dict, w: list[int]):
+    """``X @ w`` (1e-12 quanta), or None if max row Σ|X| · max|w| — the
+    bound on every partial margin sum of both routes — could leave int64."""
+    import numpy as np
+
+    if design["row_abs"] * max(map(abs, w)) > _I64_LIMIT:
+        return None
+    return design["X"] @ np.array(w, np.int64)
+
+
+def _clf_gd_local(design, n, dims, n_iter, lr_num, lr_den) -> dict[int, int] | None:
+    """:func:`_clf_gd` bit for bit on :func:`_clf_design`'s matrix: per
+    iteration ``m = X @ w``, per doc ``r = k·hardsig(m) − 1e6·ysum`` (each
+    label row of a doc meets all of its feature rows in the distributed
+    joins), ``S = Xᵀ @ r`` and the update in Python ints. None (decline) if
+    an int64 sum could wrap: max column Σ|X| · max k · 1e6 bounds every
+    gradient sum, :func:`_clf_margins` every margin, the final one too."""
+    ids, k, X = design["ids"], design["k"], design["X"]
+    if len(ids) and design["col_abs"] * int(k.max()) * QUANT > _I64_LIMIT:
+        return None
+    w = [0] * (int(dims) + 1)
+    den = int(lr_den) * int(n) * QUANT
+    for _ in range(int(n_iter) if len(ids) else 0):
+        m = _clf_margins(design, w)
+        if m is None:
+            return None
+        S = X.T @ (k * _hardsig_np(m) - QUANT * design["ysum"])
+        w = [wi - (int(lr_num) * si) // den for wi, si in zip(w, S.tolist())]
+    if _clf_margins(design, w) is None:
+        return None
+    return dict(zip(range(-1, int(dims)), w))
+
+
+def _clf_score_local(spark, design: dict, w: dict[int, int], labels: DataFrame) -> DataFrame:
+    """(doc_id, y, clf_q) per label row in doc_id order, scored on the
+    driver from the design the weights were trained on (whose final margin
+    bound :func:`_clf_gd_local` checked), as a literal frame."""
+    import numpy as np
+    import pyarrow as pa
+
+    h = _hardsig_np(_clf_margins(design, [w[d] for d in sorted(w)]))
+    order = np.argsort(design["row"], kind="stable")
+    row = design["row"][order]
+    t = pa.table({"doc_id": design["ids"][row], "y": design["y"][order], "clf_q": h[row]})
+    id_type = labels.schema["doc_id"].dataType.simpleString()
+    return spark.createDataFrame(t, f"doc_id {id_type}, y bigint, clf_q bigint")
+
+
 # Loops that run one tiny-aggregate job per step (the BPE merge loop, the
-# classifier's GD iterations): AQE's per-query replanning and a 32-way
-# shuffle add ~0.25 s/job of pure overhead on frames bounded by the step's
-# output, so both are scoped off for the loop — one small partition at any
-# input size.
+# classifier's distributed GD loop over the training cap): AQE's
+# per-query replanning and a 32-way shuffle add ~0.25 s/job of pure
+# overhead on frames bounded by the step's output, so both are scoped off
+# for the loop — one small partition at any input size.
 _TINY_JOB_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "1",
@@ -1128,10 +1248,12 @@ def _clf_gd(
     lr_num: int,
     lr_den: int,
 ) -> dict[int, int]:
-    """The integer full-batch GD loop over a (pinned) feature frame:
-    each iteration is ONE job — margins → residuals → a ``dims+1``-row
-    gradient collect; ``n`` is the training-doc count entering the
-    denominator. Returns the frozen integer weight map."""
+    """The distributed integer full-batch GD loop over a (pinned) feature
+    frame — the route over ``MAX_CLF_TRAIN_DOCS`` and the equality
+    reference of :func:`_clf_gd_local`: each iteration is ONE job —
+    margins → residuals → a ``dims+1``-row gradient collect; ``n`` is the
+    training-doc count entering the denominator. Returns the frozen
+    integer weight map."""
     w: dict[int, int] = {d: 0 for d in range(-1, int(dims))}
     with memo.scoped_conf(feats.sparkSession, _TINY_JOB_CONF):
         den = int(lr_den) * int(n) * QUANT
@@ -1156,36 +1278,24 @@ def _clf_gd(
     return w
 
 
-def _clf_score(feats: DataFrame, labels: DataFrame, w: dict[int, int]) -> DataFrame:
-    """Map-side scoring against frozen weights (broadcast literal map) —
-    used when a MATERIALIZED feature frame exists (the training path's
-    pinned design matrix)."""
-    final = (
-        feats.withColumn("wq", _wmap_col(w)[F.col("dim")])
-        .groupBy("doc_id")
-        .agg(F.sum(F.expr("comp_q * coalesce(wq, 0)")).alias("m12"))
-    )
-    return (
-        labels.join(final, "doc_id")
-        .select("doc_id", "y", F.expr(_hardsig_q("m12")).alias("clf_q"))
-        .orderBy("doc_id")
-    )
-
-
 def _clf_score_frozen(
-    docs: DataFrame, labels: DataFrame, w: dict[int, int], dims: int
+    docs: DataFrame,
+    labels: DataFrame,
+    w: dict[int, int],
+    dims: int,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """Frozen-weight scoring fused over the per-term contributions:
     ``m12 = Σ_terms sign·tf·idf·w[dim(term)] + QUANT·w[-1]`` — int64
     addition is associative, so folding the weight into each term row is
     bit-identical to summing the (doc, dim) vector first, and the
     (doc, dim) exchange plus the intercept union disappear (r14, guide
-    §2.4). Used when features are NOT already materialized (memo-hit
-    replays, the sampled trainer's full-corpus pass)."""
+    §2.4). Used when no driver design is at hand (memo-hit replays, the
+    distributed route, the sampled trainer's full-corpus pass)."""
     from .text import _tfidf_contribs
 
     termsum = (
-        _tfidf_contribs(docs, dims)
+        _tfidf_contribs(docs, dims, n_docs)
         .withColumn("wq", _wmap_col(w)[F.col("dim")])
         .groupBy("doc_id")
         .agg(F.sum(F.expr("c * coalesce(wq, 0)")).alias("__ts"))
@@ -1264,29 +1374,26 @@ def quality_clf_sampled(
     same feature scale. The ``max_train_docs`` guard applies to the
     SAMPLE: if the cut is still too big, lower the rate.
 
-    Only the SAMPLE-sized training matrix is pinned (the GD loop replays
-    it ``n_iter`` times); the corpus-sized feature frame is consumed
-    exactly once by the final scoring pass, so it stays LAZY — no
-    corpus-sized materialization anywhere."""
-    feats = _clf_features(docs, dims)
+    Only the SAMPLE's rows are collected for training (the same routes as
+    :func:`quality_clf`); the corpus-sized feature frame stays LAZY,
+    consumed once by the final scoring pass."""
+    n_docs = docs.count()
     labels = _clf_labels(docs, target_where)
 
     def train() -> dict[int, int]:
         cut = F.pmod(
             md5_hash60(F.col("doc_id").cast("string")), F.lit(QUANT)
         ) < F.lit(int(float(sample_rate) * QUANT))
-        train_ids = docs.where(cut).select("doc_id")
+        train_ids = F.broadcast(docs.where(cut).select("doc_id"))
         n = train_ids.count()
         if n > max_train_docs:
             raise ValueError(
                 f"quality_clf_sampled: the {sample_rate} sample still holds "
                 f"{n} docs (> max_train_docs={max_train_docs}); lower the rate"
             )
-        tfeats = feats.join(F.broadcast(train_ids), "doc_id").localCheckpoint(
-            eager=True
-        )
-        tlabels = labels.join(F.broadcast(train_ids), "doc_id")
-        return _clf_gd(tfeats, tlabels, n, dims, n_iter, lr_num, lr_den)
+        feats = _clf_features(docs, dims, n_docs).join(train_ids, "doc_id")
+        tlabels = labels.join(train_ids, "doc_id")
+        return _clf_train(feats, tlabels, n, dims, n_iter, lr_num, lr_den)[0]
 
     key = memo.frame_key(
         docs, "sampled", float(sample_rate), target_where, dims, n_iter,
@@ -1296,7 +1403,7 @@ def quality_clf_sampled(
     # the corpus-sized feature frame was never materialized - score the
     # full corpus with the fused frozen-weight pass instead of replaying
     # the (doc, dim) vector build
-    return _clf_score_frozen(docs, labels, w, dims)
+    return _clf_score_frozen(docs, labels, w, dims, n_docs)
 
 
 def _wmap_col(w: dict[int, int]):

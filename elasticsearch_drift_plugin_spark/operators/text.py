@@ -549,13 +549,15 @@ def hash_embed(docs: DataFrame, dims: int = 64) -> DataFrame:
     )
 
 
-def _tfidf_contribs(docs: DataFrame, dims: int) -> DataFrame:
+def _tfidf_contribs(docs: DataFrame, dims: int, n_docs: int | None = None) -> DataFrame:
     """(doc_id, dim, c): the signed per-term tf·idf contributions BEFORE
-    the per-dim sum — :func:`hash_embed`'s routing stage, shared with
-    frozen-weight classifier scoring (``corpus._clf_score_frozen``),
-    which folds the weight into each term row instead of materializing
-    the (doc, dim) vector first (int64 addition is associative, so the
-    regrouped sum is bit-identical)."""
+    the per-dim sum — :func:`hash_embed`'s routing stage, shared with the
+    classifier's design matrix (``corpus._clf_features``) and its
+    frozen-weight scoring (``corpus._clf_score_frozen``), which folds the
+    weight into each term row instead of materializing the (doc, dim)
+    vector first (int64 addition is associative, so the regrouped sum is
+    bit-identical). ``n_docs`` is ``docs.count()`` when the caller already
+    has it; otherwise it is counted here (one eager job)."""
     toks = (
         docs.select(
             "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
@@ -564,7 +566,8 @@ def _tfidf_contribs(docs: DataFrame, dims: int) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    n_docs = docs.count()  # O(1) catalog scalar
+    if n_docs is None:
+        n_docs = docs.count()
     dfreq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf_q = F.floor(
         F.log(F.lit(float(n_docs + 1)) / (F.col("df") + F.lit(1.0)))

@@ -310,18 +310,19 @@ def test_clf_weight_memo_trains_once_per_input(spark, monkeypatch):
     shares ONE deterministic train per (input fingerprint, params): the
     second call replays frozen weights (no GD), and the outputs are
     byte-identical. Sampled training keys separately. Nondeterministic
-    frames never memoize."""
+    frames never memoize. Trains are counted at ``_clf_train``, the one
+    entry of both routes (driver kernel and distributed loop)."""
     from elasticsearch_drift_plugin_spark import memo
     from elasticsearch_drift_plugin_spark.operators import corpus
 
     calls = {"n": 0}
-    real_gd = corpus._clf_gd
+    real_train = corpus._clf_train
 
-    def counting_gd(*a, **k):
+    def counting_train(*a, **k):
         calls["n"] += 1
-        return real_gd(*a, **k)
+        return real_train(*a, **k)
 
-    monkeypatch.setattr(corpus, "_clf_gd", counting_gd)
+    monkeypatch.setattr(corpus, "_clf_train", counting_train)
     memo.clear("clf_weights")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -528,26 +529,28 @@ def test_geo_distance_sort_semantics(spark):
 
 def test_dsir_lambda_memo_fits_once_per_input(spark, monkeypatch):
     """dsir_weights / dsir_sample share ONE λ-model fit per (input
-    fingerprint, params): the target-side gram aggregation runs once; a
-    repeat call replays the checkpointed λ table and the outputs are
-    byte-identical. A stale-session entry is evicted."""
+    fingerprint, params): the folded gram pass (both sides at once, carrying
+    a side flag) runs once; a repeat call replays the memoized λ table and
+    the outputs are byte-identical. A stale-session entry is evicted."""
     from elasticsearch_drift_plugin_spark import memo
     from elasticsearch_drift_plugin_spark.operators import corpus
 
-    calls = {"n": 0}
-    real = corpus._hashed_gram_counts
+    calls = {"n": 0, "fit": 0}
+    real = corpus._hashed_grams
 
     def counting(df, buckets):
         calls["n"] += 1
+        calls["fit"] += "__side" in df.columns
         return real(df, buckets)
 
-    monkeypatch.setattr(corpus, "_hashed_gram_counts", counting)
+    monkeypatch.setattr(corpus, "_hashed_grams", counting)
     memo.clear("dsir_lambda")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     first = corpus.dsir_weights(docs).collect()
     n_fit = calls["n"]
-    assert n_fit == 2  # raw gram pass + target gram pass
+    assert n_fit == 2  # the folded fit pass + the raw scoring pass
+    assert calls["fit"] == 1
     again = corpus.dsir_weights(docs).collect()
     assert calls["n"] == n_fit + 1  # only the raw scoring pass
     assert first == again
@@ -560,7 +563,8 @@ def test_dsir_lambda_memo_fits_once_per_input(spark, monkeypatch):
     (key, (sess, lam)), = store.items()
     store[key] = (object(), lam)
     corpus.dsir_weights(docs).collect()
-    assert calls["n"] == n_fit + 4  # re-fit: raw + target passes again
+    assert calls["n"] == n_fit + 4  # re-fit: the folded + scoring passes again
+    assert calls["fit"] == 2
     assert [s for s, _ in store.values()] == [spark]
 
 
