@@ -149,6 +149,7 @@ from pyspark.sql import functions as F
 
 from .es_dsl import compile_query
 from .es_dsl import compile_query_sql as _compile_query_sql
+from .sql_literal import literal_frame
 
 
 def compile_query_sql_expr(q: dict) -> str:
@@ -1013,8 +1014,8 @@ def run_search(
                 # full_outer join even when __v is NULL, so BOTH mismatch
                 # directions (more buckets / fewer buckets) are counted
             )
-            lit = src.sparkSession.createDataFrame(
-                list(enumerate(exps)), "__i int, __e double"
+            lit = literal_frame(
+                src.sparkSession, list(enumerate(exps)), "__i int, __e double"
             )
             # Pearson by hand (NULLIF-guarded) — ANSI mode makes F.corr
             # throw DIVIDE_BY_ZERO on constant series before the length

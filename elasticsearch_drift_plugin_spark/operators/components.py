@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql_literal import literal_frame
+
 # Small-graph fast path (r14): after LSH/GEMM verification the duplicate
 # pair graph is usually MUCH smaller than the corpus (near-dup density,
 # not corpus size). Below this many edges the transitive closure runs as
@@ -96,18 +98,6 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _literal_df(spark, rows, columns, fields):
-    """Literal-backed DataFrame via the Arrow/pandas conversion: the plain
-    tuple path materializes through a Python-RDD decode that spawns a
-    Python worker on EVERY action (~0.4 s measured for a 700-row frame);
-    the Arrow path lands in the JVM as columnar batches (~0.08 s)."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=columns), schema=fields
-    )
-
-
 def _driver_union_find(edges: DataFrame) -> DataFrame:
     """Bounded-collect closure for small pair graphs: classic union-find
     with path compression, then component = min member id per root — the
@@ -139,7 +129,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         f"node {out_schema['u'].dataType.simpleString()}, "
         f"component {out_schema['v'].dataType.simpleString()}"
     )
-    return _literal_df(spark, sorted(comp.items()), ["node", "component"], fields)
+    return literal_frame(spark, sorted(comp.items()), fields)
 
 
 def connected_components(
@@ -424,10 +414,9 @@ def pagerank(
             rank = new_rank
             if not moved:
                 break
-        out = _literal_df(
+        out = literal_frame(
             edges.sparkSession,
             sorted(rank.items()),
-            ["node", "rank_q"],
             f"node {edges_deg.schema['u'].dataType.simpleString()}, rank_q long",
         )
         return out.orderBy(F.col("rank_q").desc(), "node")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.hashing import HEX15_SQL_FN, md5_hash60
-from ..functions.sql_literal import sql_str
+from ..functions.sql_literal import literal_frame, sql_str
 from ..sources.flows import load_table
 
 QUANT = 1_000_000
@@ -838,8 +838,7 @@ def dsir_weights(
                 f" - floor(ln((cr + 1.0D) / (nr + {bl}D)) * {q}D) AS lam_q",
             )
         )
-        # an Arrow table (even an empty one) lands as a LocalRelation
-        return docs.sparkSession.createDataFrame(lam.toArrow(), "b long, lam_q long")
+        return literal_frame(docs.sparkSession, lam.toArrow(), "b long, lam_q long")
 
     key = memo.frame_key(docs, target_where, int(buckets))
     lam = memo.get_or_compute("dsir_lambda", key, docs.sparkSession, fit_lambda)
@@ -1225,7 +1224,7 @@ def _clf_score_local(spark, design: dict, w: dict[int, int], labels: DataFrame) 
     row = design["row"][order]
     t = pa.table({"doc_id": design["ids"][row], "y": design["y"][order], "clf_q": h[row]})
     id_type = labels.schema["doc_id"].dataType.simpleString()
-    return spark.createDataFrame(t, f"doc_id {id_type}, y bigint, clf_q bigint")
+    return literal_frame(spark, t, f"doc_id {id_type}, y bigint, clf_q bigint")
 
 
 # Loops that run one tiny-aggregate job per step (the BPE merge loop, the
@@ -2082,18 +2081,9 @@ def _bpe_merge_loop(
 
 
 def _bpe_merge_frame(spark, merges: list) -> DataFrame:
-    """Merge table as a literal-backed DataFrame via the pandas/Arrow
-    conversion (the components._literal_df lesson: the plain tuple path
-    decodes through a Python-RDD scan that spawns a Python worker on every
-    action)."""
-    schema = "rank long, left string, right string, pair_count long"
-    if not merges:
-        return spark.createDataFrame([], schema)
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(merges, columns=["rank", "left", "right", "pair_count"]),
-        schema=schema,
+    """Merge table (rank, left, right, pair_count) as a literal frame."""
+    return literal_frame(
+        spark, merges, "rank long, left string, right string, pair_count long"
     )
 
 
@@ -2253,9 +2243,7 @@ def bpe_train_distributed(
             _run_merge_loop(
                 vocab, counts, heap, merges, int(n_merges), _adj_pairs
             )
-    return spark.createDataFrame(
-        merges, "rank long, left string, right string, pair_count long"
-    )
+    return _bpe_merge_frame(spark, merges)
 
 
 _TAGGED_PAIR_T = "array<struct<m:int,l:string,r:string,d:long>>"

@@ -37,6 +37,7 @@ from ..functions.hashing import (
     minhash_expr,
     minhash_sql,
 )
+from ..functions.sql_literal import literal_frame
 from ..sources.flows import load_table
 
 NUM_PERM = 16
@@ -378,10 +379,10 @@ def ngram_jaccard_pairs_gemm(
     nb = int(n_subblocks)
 
     sb = base.withColumn("sblk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
-    bp = docs.sparkSession.createDataFrame(
-        [(i, j) for i in range(nb) for j in range(i, nb)], "bi int, bj int"
-    )
-    # nb(nb+1)/2 pair rows — a legitimately tiny broadcast (not per-doc data).
+    pairs = [(i, j) for i in range(nb) for j in range(i, nb)]
+    bp = literal_frame(docs.sparkSession, pairs, "bi int, bj int")
+    # nb(nb+1)/2 pair rows, broadcast to both sides: an Arrow-built
+    # LocalRelation, so neither side runs a Python task to produce it.
     # Diagonal pairs (bi == bj) need no right copy (the kernel reuses the
     # left side), so with the default nb == 1 the data is shipped exactly
     # once — zero overhead vs the unbounded formulation.
@@ -1039,9 +1040,8 @@ def embedding_neardup_pairs(
 
     ed = emb.select("vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(n_blocks)).alias("blk"))
     spark = emb.sparkSession
-    bp = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)], "bi int, bj int"
-    )
+    pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+    bp = literal_frame(spark, pairs, "bi int, bj int")
     left = ed.join(F.broadcast(bp), F.col("blk") == F.col("bi")).select(
         "bi", "bj", "vec_id", "embedding", F.lit(0).alias("side")
     )

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sql_literal import literal_frame
 from ..sources.flows import load_table, ts_ms_col
 
 QUANT = 1_000_000
@@ -520,8 +521,8 @@ def date_range_agg(
         .groupBy(F.col("r.key").alias("key"))
         .agg(*aggs)
     )
-    spine = df.sparkSession.createDataFrame(
-        rows, "key string, range_from long, range_to long"
+    spine = literal_frame(
+        df.sparkSession, rows, "key string, range_from long, range_to long"
     )
     fill = [F.coalesce(F.col("doc_count"), F.lit(0)).alias("doc_count")] + (
         [F.coalesce(F.col("value_q"), F.lit(0)).alias("value_q")] if value_col else []

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import memo
-from ..functions.sql_literal import sql_str
+from ..functions.sql_literal import literal_frame, sql_str
 from ..functions.time import (
     calendar_interval_expr,
     floor_fixed_ms,
@@ -249,7 +249,7 @@ def proportional_sum(
             T.StructField("doc_count", T.LongType()),
             T.StructField("value", T.DoubleType()),
         ]
-        return spark.createDataFrame([], T.StructType(fields))
+        return literal_frame(spark, [], T.StructType(fields))
 
     # In this engine's UTC-only model (tz = null, reference parity) every
     # calendar unit except month/year has CONSTANT bucket width, and its

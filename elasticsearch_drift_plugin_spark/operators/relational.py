@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql_literal import literal_frame
 from ..sources.flows import load_table
 
 QUANT = 1_000_000
@@ -248,7 +249,8 @@ def ip_range_agg(events: DataFrame, ranges=IP_RANGES) -> DataFrame:
         .groupBy("__r")
         .agg(F.count(F.lit(1)).alias("doc_count"), F.sum("__q").alias("value_q"))
     )
-    meta = events.sparkSession.createDataFrame(
+    meta = literal_frame(
+        events.sparkSession,
         [(i, k, lo, hi) for i, (k, lo, hi) in enumerate(ranges)],
         "__r int, key string, from_ip string, to_ip string",
     )

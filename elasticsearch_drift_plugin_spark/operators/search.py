@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql_literal import literal_frame
 from ..sources.flows import load_table
 
 QUANT = 1_000_000
@@ -271,8 +272,8 @@ def more_like_this(
     )
     terms = [r["term"] for r in seed_rows]
     if not terms:
-        return docs.sparkSession.createDataFrame(
-            [], "doc_id long, n_shared long, score_q long"
+        return literal_frame(
+            docs.sparkSession, [], "doc_id long, n_shared long, score_q long"
         )
     idf_map = F.create_map(
         *[F.lit(v) for r in seed_rows for v in (r["term"], int(r["idf_q"]))]
@@ -414,9 +415,7 @@ def term_suggest(
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
-    spine = docs.sparkSession.createDataFrame(
-        [(p,) for p in probes], "probe string"
-    )
+    spine = literal_frame(docs.sparkSession, [(p,) for p in probes], "probe string")
     from pyspark.sql import Window
 
     dist = F.levenshtein(F.col("probe"), F.col("term"))
@@ -463,8 +462,8 @@ def completion_suggest(
         .groupBy("option")
         .agg(F.countDistinct("doc_id").cast("long").alias("weight"))
     )
-    spine = docs.sparkSession.createDataFrame(
-        [(p,) for p in prefixes], "prefix string"
+    spine = literal_frame(
+        docs.sparkSession, [(p,) for p in prefixes], "prefix string"
     )
     from pyspark.sql import Window
 
@@ -649,12 +648,8 @@ def phrase_suggest(
             # blow Catalyst analysis and the 64KB codegen method limit.
             # Above a small threshold, prefilter with a broadcast
             # left-semi join on the candidate pair set instead.
-            import pandas as pd
-
-            spark_l = docs.sparkSession
-            need_df = spark_l.createDataFrame(
-                pd.DataFrame(sorted(need), columns=["w1", "w2"]),
-                schema="w1 string, w2 string",
+            need_df = literal_frame(
+                docs.sparkSession, sorted(need), "w1 string, w2 string"
             )
             filtered = pairs.join(
                 F.broadcast(need_df), ["w1", "w2"], "left_semi"
@@ -686,25 +681,10 @@ def phrase_suggest(
         + [f"cb{i} bigint" for i in range(n - 1)]
         + [f"cu{i} bigint" for i in range(n - 1)]
     )
-    # Arrow literal frame (ADVICE r14 item 2): the plain-tuple path decodes
-    # through a Python-RDD scan that spawns a Python worker on every
-    # action; phrase_rows is the largest literal frame in the module
-    # (cand_size**len(probe) rows). Empty when a probe slot has no
+    # phrase_rows is the largest literal frame in the module
+    # (cand_size**len(probe) rows); empty when a probe slot has no
     # candidate within max_edits.
-    if phrase_rows:
-        import pandas as pd
-
-        scored = spark.createDataFrame(
-            pd.DataFrame(
-                phrase_rows,
-                columns=[f"t{i}" for i in range(n)]
-                + [f"cb{i}" for i in range(n - 1)]
-                + [f"cu{i}" for i in range(n - 1)],
-            ),
-            schema=schema,
-        )
-    else:
-        scored = spark.createDataFrame([], schema)
+    scored = literal_frame(spark, phrase_rows, schema)
     score = None
     for i in range(n - 1):
         lp = F.floor(
@@ -1741,9 +1721,9 @@ def percolate_document(
     ])
     row = probes.first()
     matched = [int(rid) for rid, _ in rules if row[f"__m{rid}"]]
-    return spark.createDataFrame(
-        [(r,) for r in matched], "rule_id long"
-    ).orderBy("rule_id")
+    return literal_frame(spark, [(r,) for r in matched], "rule_id long").orderBy(
+        "rule_id"
+    )
 
 
 def percolate_batch(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..functions.sql_literal import literal_frame
 from ..functions.vectors import dot, l2_norm, lit_vec
 from ..sources.flows import load_table, pin_result
 
@@ -886,9 +887,10 @@ def knn_join(
         "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(n_blocks)).alias("blk")
     )
     spark = emb.sparkSession
-    bp = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)], "bi int, bj int"
-    )
+    # nb(nb+1)/2 pair rows, broadcast to both sides: an Arrow-built
+    # LocalRelation, so neither side runs a Python task to produce it.
+    pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+    bp = literal_frame(spark, pairs, "bi int, bj int")
     left = ed.join(F.broadcast(bp), F.col("blk") == F.col("bi")).select(
         "bi", "bj", "vec_id", "embedding", F.lit(0).alias("side")
     )
@@ -2079,9 +2081,8 @@ def build_ivf_index(
     write_ivf_index(
         ivf_assign(emb, cents, id_col, keep_cols=keep_cols), path, mode=mode
     )
-    emb.sparkSession.createDataFrame(
-        [(cid, vec, nm) for cid, vec, nm in cents],
-        "cid long, embedding array<double>, nm double",
+    literal_frame(
+        emb.sparkSession, cents, "cid long, embedding array<double>, nm double"
     ).coalesce(1).write.mode(mode).parquet(path + "/_centroids")
     return cents
 

@@ -65,7 +65,10 @@ def _has_watermark(df: DataFrame) -> bool:
 def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion over its bounded source and
     return the memory-sink table (unique name per run; the query is awaited
-    and stopped before returning).
+    and stopped before returning). The sink's view is dropped before
+    returning: the frame's analyzed plan keeps the sink's ``MemoryPlan``, so
+    it and frames derived from it still read the rows, and the session does
+    not hold one result table per replay.
 
     The replay scopes two session confs to the query's lifetime:
 
@@ -117,7 +120,9 @@ def run_available_now(stream_df: DataFrame, output_mode: str) -> DataFrame:
                 q.stop()
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 def stream_psum_6h(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -150,3 +150,24 @@ def test_driver_kernel_declines_where_int64_could_wrap(spark):
     # routed, the train goes to the distributed loop, which raises instead
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         corpus._clf_train(feats, labels, rows, 4, 8, 1, lr_den)
+
+
+def test_dsir_null_side_doc_stays_off_both_sides(spark):
+    """A doc whose ``target_where`` is NULL shares words, so gram buckets,
+    with target and raw docs; the fit counts it on neither side, as the
+    DuckDB twin does."""
+    import duckdb
+    import pandas as pd
+
+    rows = [
+        (1, "alpha beta gamma", "src0"),
+        (2, "alpha beta delta", "src0"),
+        (3, "omega beta psi", "src1"),
+        (4, "omega psi alpha", "src2"),
+        (5, "alpha beta omega psi omega psi", None),
+    ]
+    got = [tuple(r) for r in corpus.dsir_weights(spark.createDataFrame(rows, SCHEMA)).collect()]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"]))
+    assert got == con.sql(corpus.dsir_weights_sql()).fetchall()
+    assert [r[0] for r in got] == [3, 4]

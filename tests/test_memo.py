@@ -189,3 +189,24 @@ def test_one_memo_store_and_one_conf_scope():
                     if _is_conf_set(sub):
                         offenders.append(f"{rel}:{sub.lineno} module-level conf change")
     assert not offenders, offenders
+
+
+def test_one_way_to_build_a_literal_frame():
+    """Every ``createDataFrame(`` call in the package sits inside
+    ``functions/sql_literal.py:literal_frame``."""
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if rel == "functions/sql_literal.py":
+            (fn,) = [n for n in tree.body
+                     if isinstance(n, ast.FunctionDef) and n.name == "literal_frame"]
+            allowed = {id(n) for n in ast.walk(fn)}
+        offenders += [
+            f"{rel}:{n.lineno}" for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and _name(n) == "createDataFrame"
+            and id(n) not in allowed
+        ]
+    assert not offenders, offenders

@@ -257,6 +257,28 @@ def test_append_replay_emits_buckets_the_last_batch_finalized(spark, tmp_path):
     assert got == {BASE, BASE + HOUR, BASE + 2 * HOUR, BASE + 4 * HOUR}
 
 
+def test_replay_leaves_no_sink_view(spark, tmp_path):
+    """No ``__bounded_`` memory-sink view outlives a replay, and the frame
+    the replay returns, and a frame derived from it, still read the sink's
+    rows on every action."""
+    from elasticsearch_drift_plugin_spark.streaming.bounded import run_available_now
+
+    src = f"{tmp_path}/flows"
+    spark.createDataFrame(
+        [(BASE, BASE + 2 * HOUR, 8.0, None), (BASE + 4 * HOUR, BASE + 5 * HOUR, 3.0, None)],
+        SCHEMA,
+    ).coalesce(1).write.parquet(src)
+    agg = proportional_sum_stream(
+        spark.readStream.schema(SCHEMA).parquet(src),
+        "start_ms", "end_ms", "value", "sampling", interval=HOUR, quantize=6,
+    )
+    tbl = run_available_now(agg, "complete")
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("__bounded_")]
+    rows = tbl.orderBy("key").collect()
+    assert len(rows) == 5 and rows == tbl.orderBy("key").collect()
+    assert tbl.where(F.col("key") > BASE).count() == 4
+
+
 def test_batch_sessionize_golden(spark):
     from elasticsearch_drift_plugin_spark.operators.sessionize import sessionize
 
