@@ -50,11 +50,6 @@ def minhash_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     return coeffs
 
 
-def minhash_expr(hash_col: Column, a: int, b: int) -> Column:
-    """One permuted hash value as exact long math."""
-    return (F.lit(a) * F.pmod(hash_col, F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
-
-
 def minhash_sql(hash_expr: str, a: int, b: int) -> str:
-    """DuckDB twin of :func:`minhash_expr`."""
+    """One permuted hash value as exact long math, in DuckDB SQL."""
     return f"(({a} * (({hash_expr}) % {MINHASH_P}) + {b}) % {MINHASH_P})"

@@ -52,7 +52,8 @@ from ..functions.sql_literal import literal_frame
 # centroid and BPE merge loops — instead of 2-4 distributed star rounds
 # of ~6 stages each. Above it, the large/small-star loop (the 100 TB
 # shape) runs unchanged. Both produce component = min reachable id, so
-# results are identical by construction (pytest-pinned both ways).
+# results are identical by construction (pytest-pinned both ways). Read at
+# call time; <= 0 forces the distributed loop.
 MAX_DRIVER_EDGES = 200_000
 
 
@@ -137,7 +138,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_rounds: int = 25,
-    max_driver_edges: int | None = None,
 ) -> DataFrame:
     """(node, component): transitive closure of an undirected pair graph;
     ``component`` is the minimum node id reachable from ``node``.
@@ -149,12 +149,11 @@ def connected_components(
     converges in O(log^2 n) rounds w.h.p., so hitting 25 means the input is
     pathological; we raise rather than return a partial closure.
 
-    ``max_driver_edges`` (default :data:`MAX_DRIVER_EDGES`) gates the
-    small-graph fast path: at or below it the closure is a driver
-    union-find over one bounded collect (the fingerprint probe that is
-    needed anyway returns the edge count, so the routing costs no extra
-    job); above it the distributed star loop runs. Identical output either
-    way — component = min reachable id.
+    :data:`MAX_DRIVER_EDGES` gates the small-graph fast path: at or below
+    it the closure is a driver union-find over one bounded collect (the
+    fingerprint probe that is needed anyway returns the edge count, so the
+    routing costs no extra job); above it the distributed star loop runs.
+    Identical output either way — component = min reachable id.
     """
     # lazy localCheckpoint throughout the loop: the fingerprint probe that
     # immediately follows is the FIRST action on the frame, so one job both
@@ -169,7 +168,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev = _fingerprint(edges)
-    guard = MAX_DRIVER_EDGES if max_driver_edges is None else max_driver_edges
+    guard = MAX_DRIVER_EDGES
     # guard <= 0 means "always distributed" (ADVICE r14 item 3: the tests'
     # documented way to force the star loop — an empty graph must not slip
     # through 0 <= 0). Gate on the DIRECTED distinct edge count; pagerank
@@ -349,7 +348,6 @@ def pagerank(
     damping_num: int = 85,
     quant: int = 1_000_000_000,
     tol_q: int = 1_000,
-    max_driver_edges: int | None = None,
 ) -> DataFrame:
     """(node, rank_q): integer-quantized PageRank over the undirected pair
     graph — the "which duplicate is the hub" / corpus-authority signal a
@@ -385,11 +383,10 @@ def pagerank(
     n_edges = edges_deg.count()
     # n_edges counts the SYMMETRIZED (bidirectional) rows — ~2x the
     # directed distinct count connected_components gates on — so the
-    # default guard is doubled to keep the two operators' routing
-    # consistent near the boundary (ADVICE r14 item 3). A caller's
-    # max_driver_edges bounds the symmetrized rows on the driver as given;
-    # <= 0 forces distributed.
-    guard = 2 * MAX_DRIVER_EDGES if max_driver_edges is None else max_driver_edges
+    # guard is doubled to keep the two operators' routing consistent near
+    # the boundary (ADVICE r14 item 3); MAX_DRIVER_EDGES <= 0 still forces
+    # distributed.
+    guard = 2 * MAX_DRIVER_EDGES
     if guard > 0 and n_edges <= guard:
         # Small-graph fast path (r14, same guard/contract as
         # connected_components): the quantized recurrence is exact integer

@@ -2091,8 +2091,12 @@ def _bpe_merge_frame(spark, merges: list) -> DataFrame:
 #: driver kernel (same guarded-fast-path contract as
 #: components.MAX_DRIVER_EDGES): driver state is O(vocab · avg_len) — a
 #: 100k-word vocab is a few tens of MB — while the executor-resident loop
-#: pays ~1 job per accepted-merge batch.
+#: pays ~1 job per accepted-merge batch. Read at call time; <= 0 forces the
+#: executor-resident loop.
 BPE_DRIVER_VOCAB = 100_000
+
+#: Most merges the executor-resident loop folds into one Spark job.
+BPE_MERGE_BATCH = 8
 
 
 def bpe_train_distributed(
@@ -2100,8 +2104,6 @@ def bpe_train_distributed(
     n_merges: int = 50,
     max_vocab: int = 50_000,
     text_col: str = "text",
-    merge_batch: int = 8,
-    max_driver_vocab: int | None = None,
 ) -> DataFrame:
     """:func:`bpe_train` with the vocab table resident on the EXECUTORS —
     the shape for vocabularies too large (or merge counts too long) for a
@@ -2130,25 +2132,24 @@ def bpe_train_distributed(
     faster because dispatch dominates. Both backends share the
     corpus-sized word-count stage; only the Zipf-bounded vocab iterates.
 
-    r15: vocabularies at or below ``max_driver_vocab`` (default
-    :data:`BPE_DRIVER_VOCAB`; <= 0 forces distributed) route to the
-    shared driver kernel off the already-counted vocab — the
-    components-guard contract: the word-frequency stage is distributed
-    either way, only the Zipf-bounded merge loop moves, and the merge
-    table is bit-identical.
+    r15: vocabularies at or below :data:`BPE_DRIVER_VOCAB` (<= 0 forces
+    distributed) route to the shared driver kernel off the already-counted
+    vocab — the components-guard contract: the word-frequency stage is
+    distributed either way, only the Zipf-bounded merge loop moves, and
+    the merge table is bit-identical.
 
-    r11: ``merge_batch`` (default 8) amortizes the dispatch floor — up to
-    that many merges run as CHAINED folds in ONE job, with per-step
-    tagged deltas and a driver-side sequential-argmax replay that
-    truncates the batch at the first divergence, so the merge sequence
-    stays bit-identical to the sequential loop (``merge_batch=1``) —
-    pinned by pytest equality on the Sennrich worked example and the
-    driver corpus (tests/test_round11.py). Equally load-bearing: each
-    round's projections are built as ONE selectExpr SQL string
-    (symbols spliced in via ``sql_str``) — the Column-algebra spelling
-    spent ~250 ms/round on driver-side Py4J chatter, dwarfing the fold
-    itself. Measured at sf0.1 (30 merges): sequential loop 5.7 s /
-    30 jobs → batched 2.3 s / 24 jobs (merge chains bound acceptance:
+    r11: up to :data:`BPE_MERGE_BATCH` merges run as CHAINED folds in ONE
+    job, with per-step tagged deltas and a driver-side sequential-argmax
+    replay that truncates the batch at the first divergence, so the merge
+    sequence stays bit-identical to the driver kernel's one-merge-at-a-
+    time argmax — pinned by pytest equality against :func:`bpe_train` on
+    the Sennrich worked example, the driver corpus, hostile symbols and
+    random corpora. Equally load-bearing: each round's projections are
+    built as ONE selectExpr SQL string (symbols spliced in via
+    ``sql_str``) — the Column-algebra spelling spent ~250 ms/round on
+    driver-side Py4J chatter, dwarfing the fold itself. Measured at sf0.1
+    (30 merges): 2.3 s / 24 jobs, against 5.7 s / 30 jobs for the
+    one-job-per-merge loop this replaced (merge chains bound acceptance:
     early BPE argmaxes immediately involve the token just created, and
     bit-identity forbids speculating past them — the AIMD batch size
     tracks that structure).
@@ -2170,13 +2171,13 @@ def bpe_train_distributed(
     # materializes the word-count table and returns its size (the
     # components-loop trick)
     n_rows = vocab.count()
-    guard = BPE_DRIVER_VOCAB if max_driver_vocab is None else max_driver_vocab
+    guard = BPE_DRIVER_VOCAB
     if guard > 0 and n_rows <= guard:
         # Small-vocab fast path (r15, VERDICT r14 item 6 — the
         # components-style guard): the merge loop is driver-bounded by the
         # vocab the distributed path ALREADY collected counts over, so one
         # bounded (w, c) collect + the shared incremental kernel replaces
-        # ~n_merges/merge_batch executor jobs. Bit-identical by
+        # ~n_merges/BPE_MERGE_BATCH executor jobs. Bit-identical by
         # construction — both backends run the same argmax key and merge
         # rule (pytest-pinned equality), and the merge table is
         # independent of word order.
@@ -2217,32 +2218,9 @@ def bpe_train_distributed(
     heap = [(-c, p) for p, c in counts.items()]
     heapq.heapify(heap)
 
-    def _adj_pairs(col_name: str, sign: int):
-        """±c-weighted adjacent-pair structs of a symbol array (typed empty
-        below 2 symbols — ``sequence(1, 0)`` would DESCEND, not vanish)."""
-        col = F.col(col_name)
-        pair_t = "array<struct<l:string,r:string,d:long>>"
-        return F.when(F.size(col) < 2, F.array().cast(pair_t)).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(col) - 1),
-                lambda i: F.struct(
-                    F.get(col, i - 1).alias("l"),
-                    F.get(col, i).alias("r"),
-                    (F.lit(sign) * F.col("c")).cast("long").alias("d"),
-                ),
-            )
-        )
-
     merges: list[tuple[int, str, str, int]] = []
     with memo.scoped_conf(spark, _TINY_JOB_CONF):
-        if int(merge_batch) > 1:
-            _run_merge_loop_batched(
-                vocab, counts, heap, merges, int(n_merges), int(merge_batch)
-            )
-        else:
-            _run_merge_loop(
-                vocab, counts, heap, merges, int(n_merges), _adj_pairs
-            )
+        _run_merge_loop_batched(vocab, counts, heap, merges, int(n_merges))
     return _bpe_merge_frame(spark, merges)
 
 
@@ -2251,7 +2229,7 @@ _TAGGED_PAIR_T = "array<struct<m:int,l:string,r:string,d:long>>"
 
 def _bpe_fold_step_sql(prev: str, left: str, right: str) -> str:
     """One BPE merge as a left-to-right fold, as SQL text over the plain
-    column ``prev`` — same semantics as the sequential loop's Column fold
+    column ``prev`` — the driver kernel's left-to-right merge rule
     (merged token can never equal ``left``, so a fresh merge never
     re-merges in the same pass; ``get`` is 0-based and NULL-safe on the
     empty acc)."""
@@ -2277,16 +2255,14 @@ def _adj_pairs_tagged_sql(col: str, sign: int, tag: int) -> str:
     )
 
 
-def _run_merge_loop_batched(
-    vocab, counts, heap, merges, n_merges, batch, _stats=None
-):
-    """Multi-merge batching (r11): up to ``batch`` merges per Spark job
-    instead of one — the sequential loop's cost floor IS the per-merge job
-    dispatch (VERDICT r10: corpus_bpe_train_dist, the slowest bench
+def _run_merge_loop_batched(vocab, counts, heap, merges, n_merges):
+    """Multi-merge batching (r11): up to :data:`BPE_MERGE_BATCH` merges per
+    Spark job instead of one — a one-merge-per-job loop's cost floor IS the
+    job dispatch (VERDICT r10: corpus_bpe_train_dist, the slowest bench
     query), so amortize it.
 
-    BIT-IDENTICAL to the sequential argmax loop by construction, not by
-    heuristic: the batch candidates are applied as CHAINED folds inside
+    BIT-IDENTICAL to the one-merge-at-a-time argmax by construction, not
+    by heuristic: the batch candidates are applied as CHAINED folds inside
     one job (chained folds ARE sequential application), each step's pair
     deltas come back tagged with the step index, and the driver REPLAYS
     sequential argmax over those per-step deltas — the first step whose
@@ -2303,10 +2279,10 @@ def _run_merge_loop_batched(
     replay. Step 1 always validates (it is the true argmax at selection
     time), so every round makes progress. The batch size ADAPTS (AIMD:
     double on full acceptance, shrink to the accepted prefix on
-    truncation, capped by ``batch``) because early BPE rounds chain —
-    each merged token immediately spawns the next top pair, so big
-    speculative batches mostly truncate — while the Zipf tail flattens
-    and accepts full batches.
+    truncation, capped by :data:`BPE_MERGE_BATCH`) because early BPE
+    rounds chain — each merged token immediately spawns the next top pair,
+    so big speculative batches mostly truncate — while the Zipf tail
+    flattens and accepts full batches.
     """
     import heapq
 
@@ -2389,8 +2365,6 @@ def _run_merge_loop_batched(
                 else:
                     cur.pop((dl, dr), None)
 
-        if _stats is not None:
-            _stats.append((k, prefix))
         # commit the accepted prefix into the live counts + heap
         for i in range(1, prefix + 1):
             for dl, dr, dd in per_tag.get(i, ()):
@@ -2409,73 +2383,7 @@ def _run_merge_loop_batched(
             break
         # AIMD batch sizing: full acceptance → double; truncation →
         # shrink to what sequential actually took
-        k_cur = min(batch, k_cur * 2) if prefix == k else max(1, prefix)
-
-
-def _run_merge_loop(vocab, counts, heap, merges, n_merges, _adj_pairs):
-    """The sequential argmax-merge loop of :func:`bpe_train_distributed` —
-    one codegen'd Spark job per merge, vocab resident on executors."""
-    import heapq
-
-    for rank in range(int(n_merges)):
-        while heap:
-            negc, pair = heap[0]
-            if counts.get(pair, 0) == -negc:
-                break
-            heapq.heappop(heap)
-        if not heap or -heap[0][0] < 2:
-            break
-        best = -heap[0][0]
-        left, right = heap[0][1]
-        merges.append((rank, left, right, best))
-
-        # the fold replaces adjacent (left, right) with the merged token in
-        # one left-to-right pass; F.lit keeps arbitrary corpus symbols out
-        # of any SQL string. F.get is 0-based and NULL-safe on empty acc.
-        merged_tok = F.lit(left + right)
-        lit_l, lit_r = F.lit(left), F.lit(right)
-
-        def _step(acc, x):
-            last = F.get(acc, F.size(acc) - 1)
-            hit = last.eqNullSafe(lit_l) & (x == lit_r)
-            return F.when(
-                hit,
-                F.concat(
-                    F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(merged_tok)
-                ),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        stepped = vocab.select(
-            "w",
-            "c",
-            "syms",
-            F.aggregate(
-                "syms", F.array().cast("array<string>"), _step
-            ).alias("nsyms"),
-            # lazy checkpoint: the delta collect right below is the frame's
-            # first action and materializes it — ONE codegen'd job per merge
-        ).localCheckpoint(eager=False)
-        deltas = (
-            stepped.where(F.col("nsyms") != F.col("syms"))
-            .select(
-                F.explode(
-                    F.concat(_adj_pairs("syms", -1), _adj_pairs("nsyms", +1))
-                ).alias("p")
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("p.d").alias("d"))
-            .where("d <> 0")
-            .collect()
-        )
-        for r in deltas:
-            p = (r.l, r.r)
-            c = counts.get(p, 0) + int(r.d)
-            if c > 0:
-                counts[p] = c
-                heapq.heappush(heap, (-c, p))
-            else:
-                counts.pop(p, None)
-        vocab = stepped.select("w", "c", F.col("nsyms").alias("syms"))
+        k_cur = min(BPE_MERGE_BATCH, k_cur * 2) if prefix == k else max(1, prefix)
 
 
 def bpe_encode(
@@ -2891,10 +2799,8 @@ def queries() -> dict:
         ),
         # the executor-resident backend against the SAME unrolled-replay
         # oracle: the bit-identity claim is driver-checked, not pytest-only.
-        # Wall-clock here is 30 sequential argmax JOBS x the local dispatch
-        # floor (~0.2 s each) by construction — the backend exists for
-        # vocab/merge scales where the driver backend can't pin the table,
-        # not to win a 31-word demo corpus (cost model in the docstring).
+        # This small vocab takes the BPE_DRIVER_VOCAB driver route; the
+        # executor-resident loop is for vocabularies the driver can't pin.
         "corpus_bpe_train_dist": lambda s, d: bpe_train_distributed(
             load_table(s, d, "documents"), n_merges=30
         ),

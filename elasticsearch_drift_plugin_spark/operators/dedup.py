@@ -6,10 +6,9 @@ joins/set ops at all); these are the north-star extensions
 
 - exact dedup          — hash-groupBy on content digest (shuffle key is the
                          16-byte md5, never the full document);
-- char-n-gram Jaccard  — blocked pair similarity; three output-identical
-                         kernels (postings inverted index, PPJoin prefix
-                         filter, per-block incidence GEMM) for different
-                         corpus shapes;
+- char-n-gram Jaccard  — blocked pair similarity (and containment, either
+                         direction) through one per-block incidence GEMM
+                         kernel;
 - MinHash + LSH        — shingle → 16 permuted min-hashes → 4 bands of 4 →
                          band-bucket join for candidates → exact verify;
 - SimHash              — 16-bit signed-projection signature;
@@ -34,7 +33,6 @@ from ..functions.hashing import (
     MINHASH_P,
     md5_hash60,
     minhash_coeffs,
-    minhash_expr,
     minhash_sql,
 )
 from ..functions.sql_literal import literal_frame
@@ -106,220 +104,44 @@ GROUP BY d ORDER BY doc_id
 # --------------------------------------------------------------------------
 # char n-gram Jaccard (blocked by a key column)
 # --------------------------------------------------------------------------
-def _char_grams(docs: DataFrame, n: int = 3) -> DataFrame:
-    return (
-        docs.where(F.length("text") >= n)
-        .select(
-            "doc_id",
-            "source",
-            "text",
-            F.explode(F.sequence(F.lit(1), F.length("text") - (n - 1))).alias("i"),
-        )
-        .select("doc_id", "source", F.expr(f"substring(text, i, {n})").alias("g"))
-        .distinct()
-    )
-
-
-MAX_POSTING_LEN = 1_000_000
-
-
-def _pair_intersections(
-    items: DataFrame,
-    key_cols: list[str],
-    item_col: str,
-    max_posting_len: int = MAX_POSTING_LEN,
-    on_hot: str = "raise",
-) -> DataFrame:
-    """(doc_a, doc_b, i): co-occurrence counts via inverted-index postings.
-
-    One groupBy builds sorted postings per (key, item); pairs come from a
-    combination explode of each posting — one shuffle total, versus the
-    classic postings self-join's two shuffled sides plus a join. The pair
-    fan-out (Σ len(posting)²) is identical either way; hot postings are the
-    skew to watch, bounded here by the blocking key AND by
-    ``max_posting_len``. ``on_hot`` picks the over-cap policy:
-
-    - ``"raise"`` (default): abort with a clear error — the circuit-
-      breaker pattern; len² pair fan-out from one key would otherwise
-      OOM an executor silently.
-    - ``"drop_gram"``: drop the hot posting entirely — df-cap semantics
-      (the standard prefix-filter degrade): a gram shared by more than
-      ``max_posting_len`` docs carries almost no pairing signal, so a
-      100 TB run survives a pathological gram without a re-shard. The
-      cost is an UNDERCOUNT of per-pair intersections (scores are a
-      lower bound; pairs whose only shared grams are hot disappear) —
-      i.e. the capped output is a subset filter of the exact one, like
-      an LSH candidate stage.
-    """
-    if on_hot not in ("raise", "drop_gram"):
-        raise ValueError(f"on_hot must be 'raise' or 'drop_gram', got {on_hot!r}")
-    postings = (
-        items.groupBy(*key_cols, item_col)
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .where(F.size("ds") > 1)
-    )
-    if on_hot == "drop_gram":
-        postings = postings.where(F.size("ds") <= max_posting_len)
-    else:
-        postings = postings.withColumn(
-            "ds",
-            F.when(F.size("ds") <= max_posting_len, F.col("ds")).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"posting list over max_posting_len={max_posting_len} for "),
-                        F.lit(item_col),
-                        F.lit("="),
-                        F.col(item_col).cast("string"),
-                        F.lit(" — raise the cap, use a finer blocking key,"
-                              " or pass on_hot='drop_gram' (df-cap degrade:"
-                              " scores become lower bounds)"),
-                    )
-                )
-            ),
-        )
-    return (
-        postings.select(F.posexplode("ds").alias("i", "doc_a"), F.col("ds"))
-        .select(
-            "doc_a",
-            F.explode(F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("doc_b"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    block_col: str = "source",
-    max_posting_len: int = MAX_POSTING_LEN,
-    on_hot: str = "raise",
-) -> DataFrame:
-    """Pairs with char-3-gram Jaccard >= threshold, within blocks.
-
-    Inverted index: gram → posting list → co-occurrence counts. The block
-    key rides the postings so cross-block pairs are never materialized.
-    ``on_hot='drop_gram'`` degrades hot postings to a df-cap (subset
-    output, lower-bound scores) instead of raising — see
-    :func:`_pair_intersections`.
-    """
-    grams = _char_grams(docs)
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = _pair_intersections(
-        grams, [block_col], "g", max_posting_len, on_hot
-    )
-    # No broadcast hint: `counts` has one row PER DOCUMENT — forcing it onto
-    # every executor is O(corpus) memory at scale. It's a plain equi-join on
-    # doc_id; AQE picks broadcast only when runtime stats say it's small.
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    jacc = F.col("i").cast("double") / (F.col("ca.n") + F.col("cb.n") - F.col("i"))
-    return (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .where(jacc >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(jacc * F.lit(float(QUANT))).alias("jacc_q"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    docs: DataFrame, threshold: float = 0.5, block_col: str = "source"
-) -> DataFrame:
-    """Same output as :func:`ngram_jaccard_pairs`, via prefix filtering
-    (the public PPJoin/AllPairs idea): under one global gram order (ascending
-    document frequency, gram as tie-break), any pair with Jaccard >= t must
-    collide within the first ``n - ceil(t*n) + 1`` grams of both docs — so
-    only that prefix is indexed. Frequent grams sort to every doc's suffix,
-    which deletes the hot postings that otherwise approach a full in-block
-    cross product; verification is one codegen'd array_intersect per
-    surviving candidate.
-
-    Tradeoff (measured at sf0.1): this corpus is dup-heavy (~232k true
-    pairs ≥ 0.5 from 5k docs), so the prefix prunes little and the per-pair
-    array_intersect dominates — the postings inverted index
-    (:func:`ngram_jaccard_pairs`) is ~5× faster there and stays the default.
-    Prefix filtering wins when true-dup density is low (typical web-scale
-    corpora): candidate fan-out then scales with rare-gram co-occurrence
-    instead of block size squared. Choose per corpus.
-    """
-    grams = _char_grams(docs)
-    freq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        grams.join(freq, "g")  # co-partitioned with freq's groupBy on g
-        .groupBy("doc_id", block_col)
-        .agg(F.array_sort(F.collect_list(F.struct("df", "g"))).alias("gs"))
-        .select(
-            "doc_id",
-            block_col,
-            F.col("gs").getField("g").alias("ga"),
-            F.size("gs").cast("long").alias("n"),
-        )
-    )
-    p = (F.col("n") - F.ceil(F.lit(float(threshold)) * F.col("n")) + 1).cast("int")
-    idx = per_doc.select(
-        "doc_id", block_col, F.explode(F.slice(F.col("ga"), F.lit(1), p)).alias("g")
-    )
-    postings = (
-        idx.groupBy(block_col, "g")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .where(F.size("ds") > 1)
-    )
-    cand = (
-        postings.select(F.posexplode("ds").alias("i", "doc_a"), F.col("ds"))
-        .select(
-            "doc_a",
-            F.explode(F.slice(F.col("ds"), F.col("i") + 2, F.size("ds"))).alias("doc_b"),
-        )
-        .distinct()
-    )
-    a = per_doc.select(
-        F.col("doc_id").alias("doc_a"), F.col("ga").alias("ga_a"), F.col("n").alias("na")
-    )
-    b = per_doc.select(
-        F.col("doc_id").alias("doc_b"), F.col("ga").alias("ga_b"), F.col("n").alias("nb")
-    )
-    inter = F.size(F.array_intersect("ga_a", "ga_b")).cast("long")
-    jacc = inter.cast("double") / (F.col("na") + F.col("nb") - inter)
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(jacc >= threshold)
-        .select("doc_a", "doc_b", F.floor(jacc * F.lit(float(QUANT))).alias("jacc_q"))
-        .orderBy("doc_a", "doc_b")
-    )
+#: Sub-block size bound of :func:`ngram_jaccard_pairs_gemm`: a block of
+#: ``block_col`` hotter than this is hash-split so no pandas group exceeds
+#: two sub-blocks of docs.
+MAX_BLOCK_ROWS = 4096
 
 
 def ngram_jaccard_pairs_gemm(
     docs: DataFrame,
     threshold: float = 0.5,
     block_col: str = "source",
-    max_block_rows: int = 4096,
-    n_subblocks: int | None = None,
     score: str = "jaccard",
 ) -> DataFrame:
-    """Same output as :func:`ngram_jaccard_pairs`, via incidence-matrix GEMM
-    over bounded sub-block pairs: a block's docs×grams 0/1 matrices A, B ⇒
-    A·Bᵀ is the pairwise intersection-count matrix in one BLAS call (float32
-    is exact for 0/1 dot products up to 2^24). Right shape for dup-heavy
-    blocked corpora where docs share a modest gram vocabulary — this
-    corpus's blocks are near-cliques (hottest posting = 98% of its block),
-    where the postings index must materialize Σ|A∩B| ≈ 55M pair-rows and
-    this kernel replaces them with small matrix products.
+    """Pairs with char-3-gram Jaccard (or containment) >= threshold within
+    blocks, via incidence-matrix GEMM over bounded sub-block pairs: a
+    block's docs×grams 0/1 matrices A, B ⇒ A·Bᵀ is the pairwise
+    intersection-count matrix in one BLAS call (float32 is exact for 0/1
+    dot products up to 2^24). This corpus's blocks are near-cliques
+    (hottest posting = 98% of its block), where a postings inverted index
+    must materialize Σ|A∩B| ≈ 55M pair-rows; this kernel replaces them
+    with small matrix products.
+
+    ``score`` picks the measure, each with a DuckDB twin that is its
+    oracle: ``"jaccard"`` (:data:`NGRAM_SQL`), ``"containment"``
+    ``|A∩B| / min(|A|, |B|)`` (:data:`CONTAINMENT_SQL`) and
+    ``"containment_dir"`` ``|A∩B| / |A|`` per direction, as (contained,
+    container) rows (:data:`NGRAM_CONTAINMENT_SQL`). As in the twins, a
+    doc's grams are the union over its rows, and rows with a NULL
+    ``doc_id`` or ``block_col`` pair with nothing.
 
     Scale design (mirrors :func:`embedding_neardup_pairs`): each
-    ``block_col`` value is hash-split on ``doc_id`` into ``n_subblocks``
-    sub-blocks of ≤ ~``max_block_rows`` docs, and every sub-block PAIR
-    (i <= j) is one ``applyInPandas`` group — so the pandas group is bounded
-    by 2×``max_block_rows`` docs no matter how hot a block value is (a hot
+    ``block_col`` value is hash-split on ``doc_id`` into sub-blocks of
+    ≤ ~:data:`MAX_BLOCK_ROWS` docs, and every sub-block PAIR (i <= j) is
+    one ``applyInPandas`` group — so the pandas group is bounded by
+    2×``MAX_BLOCK_ROWS`` docs no matter how hot a block value is (a hot
     ``source`` would otherwise put an unbounded block into one executor).
-    Each doc is replicated ``n_subblocks + 1`` times; with the default
-    auto-sizing (hottest block count, one tiny count agg) that is 1 — i.e.
-    zero replication — until a block actually exceeds ``max_block_rows``.
+    Each doc is replicated once per sub-block plus one; the split is sized
+    from the hottest block (one tiny count agg), so there is zero
+    replication until a block actually exceeds ``MAX_BLOCK_ROWS``.
 
     Gram extraction happens JVM-side as a map-only HOF that hashes each
     gram to an int64 (``array_distinct(transform(sequence(...), i ->
@@ -347,9 +169,15 @@ def ngram_jaccard_pairs_gemm(
     from ..sources.flows import widen_narrow_scan
 
     # the gram HOF is the CPU-heavy map step; widen a too-narrow scan so it
-    # parallelizes (no-op shuffle-wise when the input has enough splits)
+    # parallelizes (no-op shuffle-wise when the input has enough splits).
+    # A NULL id or block key never pairs in the twins (NULL = x is NULL).
     narrow = widen_narrow_scan(
-        docs.select("doc_id", block_col, "text").where(F.length("text") >= n), "doc_id"
+        docs.select("doc_id", block_col, "text").where(
+            F.col("doc_id").isNotNull()
+            & F.col(block_col).isNotNull()
+            & (F.length("text") >= n)
+        ),
+        "doc_id",
     )
     base = narrow.select(
         "doc_id",
@@ -359,24 +187,23 @@ def ngram_jaccard_pairs_gemm(
             f" i -> xxhash64(substring(text, i, {n}))))"
         ).alias("ga"),
     )
-    if n_subblocks is None:
-        # One tiny count-agg job sizes the split; memoized so repeated runs
-        # over the same data — bench best-of-N, a dashboard refresh — pay
-        # it once.
-        def hottest_block():
-            return (
-                docs.groupBy(block_col)
-                .agg(F.count(F.lit(1)).alias("c"))
-                .agg(F.max("c").alias("m"))
-                .first()["m"]
-            )
 
-        hot = memo.get_or_compute(
-            "hot_block", memo.frame_key(docs, block_col), docs.sparkSession,
-            hottest_block,
+    # One tiny count-agg job sizes the split; memoized so repeated runs
+    # over the same data — bench best-of-N, a dashboard refresh — pay it
+    # once.
+    def hottest_block():
+        return (
+            docs.groupBy(block_col)
+            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(F.max("c").alias("m"))
+            .first()["m"]
         )
-        n_subblocks = max(1, math.ceil((hot or 1) / max_block_rows))
-    nb = int(n_subblocks)
+
+    hot = memo.get_or_compute(
+        "hot_block", memo.frame_key(docs, block_col), docs.sparkSession,
+        hottest_block,
+    )
+    nb = max(1, math.ceil((hot or 1) / MAX_BLOCK_ROWS))
 
     sb = base.withColumn("sblk", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
     pairs = [(i, j) for i in range(nb) for j in range(i, nb)]
@@ -384,8 +211,8 @@ def ngram_jaccard_pairs_gemm(
     # nb(nb+1)/2 pair rows, broadcast to both sides: an Arrow-built
     # LocalRelation, so neither side runs a Python task to produce it.
     # Diagonal pairs (bi == bj) need no right copy (the kernel reuses the
-    # left side), so with the default nb == 1 the data is shipped exactly
-    # once — zero overhead vs the unbounded formulation.
+    # left side), so with nb == 1 (no block over MAX_BLOCK_ROWS) the data is
+    # shipped exactly once — zero overhead vs the unbounded formulation.
     left = sb.join(F.broadcast(bp), F.col("sblk") == F.col("bi")).select(
         block_col, "bi", "bj", "doc_id", "ga", F.lit(0).alias("side")
     )
@@ -401,45 +228,47 @@ def ngram_jaccard_pairs_gemm(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({a_col: [], b_col: [], out_col: []}).astype("int64")
         same = pdf["bi"].iat[0] == pdf["bj"].iat[0]
-        l = pdf.drop_duplicates("doc_id") if same else pdf[pdf["side"] == 0]
+        l = pdf if same else pdf[pdf["side"] == 0]
         r = l if same else pdf[pdf["side"] == 1]
         if l.empty or r.empty:
             return empty
 
         def incidence_input(frame: pd.DataFrame):
+            """(ids, rows, flat): the frame's distinct doc ids and, for each
+            gram hash in ``flat``, the index of its doc in ``ids`` — a doc
+            on several rows gets the union of their grams, as in the twins."""
             arrays = [np.asarray(a, dtype=np.int64) for a in frame["ga"]]
             lens = np.fromiter((len(a) for a in arrays), dtype=np.int64)
             flat = np.concatenate(arrays) if arrays else np.empty(0, np.int64)
-            return lens, flat
+            ids, rows = np.unique(frame["doc_id"].to_numpy(), return_inverse=True)
+            return ids, np.repeat(rows, lens), flat
 
-        llens, lflat = incidence_input(l)
+        da, lrows, lflat = incidence_input(l)
         if same:
             uniq, codes = np.unique(lflat, return_inverse=True)
-            lcodes, rcodes, rlens = codes, codes, llens
+            db, lcodes, rcodes = da, codes, codes
         else:
-            rlens, rflat = incidence_input(r)
+            db, rrows, rflat = incidence_input(r)
             uniq, codes = np.unique(np.concatenate([lflat, rflat]), return_inverse=True)
             lcodes, rcodes = codes[: len(lflat)], codes[len(lflat) :]
         if not len(uniq):
             return empty
 
-        def incidence(lens: np.ndarray, codes: np.ndarray) -> np.ndarray:
-            m = np.zeros((len(lens), len(uniq)), dtype=np.float32)
-            m[np.repeat(np.arange(len(lens)), lens), codes] = 1.0
+        def incidence(n_docs: int, rows: np.ndarray, codes: np.ndarray) -> np.ndarray:
+            m = np.zeros((n_docs, len(uniq)), dtype=np.float32)
+            m[rows, codes] = 1.0
             return m
 
-        A = incidence(llens, lcodes)
-        B = A if same else incidence(rlens, rcodes)
+        A = incidence(len(da), lrows, lcodes)
+        B = A if same else incidence(len(db), rrows, rcodes)
         inter = (A @ B.T).astype(np.float64)
         sa = A.sum(axis=1, dtype=np.float64)
         sb_ = sa if same else B.sum(axis=1, dtype=np.float64)
         if directional:
             # C(row→col) = |A∩B| / |grams(row)| per direction — both
             # orientations from the one intersection matrix. Quantized
-            # as floor(i * Q / n) to replay the postings/oracle
-            # arithmetic bit-exactly.
-            da = l["doc_id"].to_numpy()
-            db = r["doc_id"].to_numpy()
+            # as floor(i * Q / n) to replay the twin's arithmetic
+            # bit-exactly.
             with np.errstate(invalid="ignore", divide="ignore"):
                 fwd = np.where(sa[:, None] > 0, inter / sa[:, None], 0.0)
                 rev = np.where(sb_[None, :] > 0, inter / sb_[None, :], 0.0)
@@ -474,17 +303,15 @@ def ngram_jaccard_pairs_gemm(
             denom = sa[:, None] + sb_[None, :] - inter
         with np.errstate(invalid="ignore", divide="ignore"):
             jacc = np.where(denom > 0, inter / denom, 0.0)
-        # >= 1 shared gram, like the postings formulation (a pair with no
-        # co-occurring gram never appears in an inverted index)
+        # >= 1 shared gram, like the twins' gram self-join (a pair with no
+        # co-occurring gram never appears in it)
         mask = (inter >= 1.0) & (jacc >= thr)
         if same:
             mask = np.triu(mask, k=1)
         ai, bi_ = np.nonzero(mask)
         if not len(ai):
             return empty
-        da = l["doc_id"].to_numpy()[ai]
-        db = r["doc_id"].to_numpy()[bi_]
-        lo, hi = np.minimum(da, db), np.maximum(da, db)
+        lo, hi = np.minimum(da[ai], db[bi_]), np.maximum(da[ai], db[bi_])
         return pd.DataFrame(
             {
                 "doc_a": lo,
@@ -504,61 +331,6 @@ def ngram_jaccard_pairs_gemm(
         .groupBy(block_col, "bi", "bj")
         .applyInPandas(kernel, f"{a_col} long, {b_col} long, {out_col} long")
     ).orderBy(a_col, b_col)
-
-
-def ngram_containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    block_col: str = "source",
-    max_posting_len: int = MAX_POSTING_LEN,
-    on_hot: str = "raise",
-) -> DataFrame:
-    """(contained, container, cont_q): DIRECTIONAL containment —
-    C(A→B) = |grams(A) ∩ grams(B)| / |grams(A)| ≥ threshold, each
-    direction its own row. :func:`containment_pairs` (min-denominator)
-    flags the same pairs symmetrically; this variant additionally says
-    WHICH side is the contained one — the doc a curation pass drops —
-    so the two registrations are complementary, not duplicates.
-
-    Same scale shape as :func:`ngram_jaccard_pairs`: the postings
-    inverted index computes pair intersections inside blocks (cross-
-    block pairs never materialize), counts join per side, one threshold
-    filter — no all-pairs path.
-    """
-    grams = _char_grams(docs)
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = _pair_intersections(
-        grams, [block_col], "g", max_posting_len, on_hot
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    j = (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", "i",
-            F.col("ca.n").alias("na"), F.col("cb.n").alias("nb"),
-        )
-    )
-    fwd = j.where(
-        F.col("i").cast("double") / F.col("na") >= threshold
-    ).select(
-        F.col("doc_a").alias("contained"),
-        F.col("doc_b").alias("container"),
-        F.floor(F.col("i") * F.lit(float(QUANT)) / F.col("na")).alias(
-            "cont_q"
-        ),
-    )
-    rev = j.where(
-        F.col("i").cast("double") / F.col("nb") >= threshold
-    ).select(
-        F.col("doc_b").alias("contained"),
-        F.col("doc_a").alias("container"),
-        F.floor(F.col("i") * F.lit(float(QUANT)) / F.col("nb")).alias(
-            "cont_q"
-        ),
-    )
-    return fwd.unionAll(rev).orderBy("contained", "container")
 
 
 NGRAM_CONTAINMENT_SQL = f"""
@@ -1120,47 +892,6 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
-
-def containment_pairs(
-    docs: "DataFrame",
-    threshold: float = 0.8,
-    block_col: str = "source",
-    max_posting_len: int = MAX_POSTING_LEN,
-    on_hot: str = "raise",
-) -> "DataFrame":
-    """(doc_a, doc_b, cont_q): pairs whose char-3-gram CONTAINMENT
-    ``|A∩B| / min(|A|, |B|)`` reaches ``threshold`` — the asymmetric
-    cousin of Jaccard. Jaccard misses a short document quoted inside a
-    much longer one (the union dilutes the score); containment is the
-    sub-document-duplication screen web-curation pipelines (RefinedWeb /
-    Dolma lineage) run alongside symmetric near-dup.
-
-    Same inverted-index shape as :func:`ngram_jaccard_pairs` (postings →
-    co-occurrence counts, block key rides the postings, hot postings
-    capped), only the final scoring expression differs — so the 100 TB
-    properties are identical.
-    """
-    grams = _char_grams(docs)
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = _pair_intersections(
-        grams, [block_col], "g", max_posting_len, on_hot
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    cont = F.col("i").cast("double") / F.least(F.col("ca.n"), F.col("cb.n"))
-    return (
-        inter.join(ca, F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cb, F.col("cb.doc_id") == F.col("doc_b"))
-        .where(cont >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(cont * F.lit(float(QUANT))).alias("cont_q"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 CONTAINMENT_SQL = f"""
 WITH grams AS (
   SELECT DISTINCT doc_id, source, substr(text, CAST(i AS INTEGER), 3) AS g
@@ -1322,14 +1053,9 @@ def queries() -> dict:
             _docs(s, d).where("source <> 'src0'"),
             _docs(s, d).where("source = 'src0'"),
         ),
-        # GEMM kernel: fastest on this corpus's near-clique blocks (see
-        # variant docstrings); output identical to the postings variant
         "dedup_ngram_jaccard": lambda s, d: ngram_jaccard_pairs_gemm(_docs(s, d)),
-        # GEMM kernel (r14): the postings formulation measured 12.5 s
-        # warm best-of-4 at sf0.1 vs 1.45 s for the symmetric GEMM
-        # sibling — the near-clique blocks' Σ len² posting fan-out is
-        # the cost; the directional GEMM mode reads both orientations
-        # off the ONE intersection matrix
+        # the directional mode reads both orientations off the ONE
+        # intersection matrix
         "dedup_containment_dir": lambda s, d: ngram_jaccard_pairs_gemm(
             _docs(s, d), threshold=0.8, score="containment_dir"
         ),
@@ -1339,8 +1065,6 @@ def queries() -> dict:
         "dedup_embedding_cosine": lambda s, d: embedding_neardup_pairs(
             load_table(s, d, "embeddings")
         ),
-        # GEMM kernel (like dedup_ngram_jaccard): this corpus's blocks are
-        # near-cliques, where the postings formulation is ~5x slower
         "dedup_containment": lambda s, d: ngram_jaccard_pairs_gemm(
             _docs(s, d), threshold=0.8, score="containment"
         ),

@@ -6,12 +6,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_drift_plugin_spark.operators import multimodal, similarity
+from ngram_reference import ngram_pairs_ref, run_twin
+
+from elasticsearch_drift_plugin_spark.operators import dedup, multimodal, similarity
 from elasticsearch_drift_plugin_spark.operators.dedup import (
     exact_dedup,
-    ngram_jaccard_pairs,
     ngram_jaccard_pairs_gemm,
-    ngram_jaccard_pairs_prefix,
 )
 
 
@@ -28,7 +28,7 @@ def test_exact_dedup_groups(spark):
     assert got == {1: 3, 3: 1}
 
 
-def test_ngram_prefix_filter_matches_baseline(spark):
+def test_ngram_gemm_matches_twin(spark):
     rows = [
         (1, "a", "the quick brown fox jumps over the lazy dog"),
         (2, "a", "the quick brown fox jumps over the lazy cat"),
@@ -37,28 +37,69 @@ def test_ngram_prefix_filter_matches_baseline(spark):
         (5, "a", "the quick brown fox leaps over the lazy dog"),
         (6, "a", "xy"),  # below gram length
     ]
-    df = _docs(spark, rows)
-    base = [tuple(r) for r in ngram_jaccard_pairs(df).collect()]
-    pref = [tuple(r) for r in ngram_jaccard_pairs_prefix(df).collect()]
-    gemm = [tuple(r) for r in ngram_jaccard_pairs_gemm(df).collect()]
-    assert base == pref == gemm
-    assert {(a, b) for a, b, _ in base} == {(1, 2), (1, 5), (2, 5)}
+    gemm = [tuple(r) for r in ngram_jaccard_pairs_gemm(_docs(spark, rows)).collect()]
+    assert gemm == run_twin(rows, dedup.NGRAM_SQL)
+    assert {(a, b) for a, b, _ in gemm} == {(1, 2), (1, 5), (2, 5)}
 
 
-def test_ngram_gemm_bounded_subblocks_match_baseline(spark):
-    """A block hotter than max_block_rows is hash-split into sub-block pairs;
-    output must stay identical to the postings inverted index — including
-    pairs whose two docs land in different sub-blocks."""
+def test_ngram_gemm_bounded_subblocks_match_baseline(spark, monkeypatch):
+    """A block hotter than MAX_BLOCK_ROWS is hash-split into sub-block pairs;
+    output must stay identical to the twin — including pairs whose two docs
+    land in different sub-blocks."""
     rows = [(i, "a", f"the quick brown fox number {i % 3} jumps") for i in range(12)]
     rows.append((100, "b", "the quick brown fox number 0 jumps"))  # other block
     df = _docs(spark, rows)
-    base = [tuple(r) for r in ngram_jaccard_pairs(df).collect()]
+    base = run_twin(rows, dedup.NGRAM_SQL)
     assert len(base) == 66  # C(12,2): every same-source pair clears 0.5
-    # 12-doc block with a 4-doc bound -> 3 sub-blocks; and an explicit
-    # overpartitioned case (more sub-blocks than docs per side)
-    for kw in ({"max_block_rows": 4}, {"n_subblocks": 5}):
-        got = [tuple(r) for r in ngram_jaccard_pairs_gemm(df, **kw).collect()]
-        assert got == base, kw
+    # 12-doc block with a 4-doc bound -> 3 sub-blocks; and an over-
+    # partitioned case (more sub-blocks than docs per side)
+    for bound in (4, 1):
+        monkeypatch.setattr(dedup, "MAX_BLOCK_ROWS", bound)
+        got = [tuple(r) for r in ngram_jaccard_pairs_gemm(df).collect()]
+        assert got == base, bound
+
+
+# The GEMM kernel against its DuckDB twin, at the twin's own threshold, on
+# the edge inputs the sf testdata never holds (ids there are unique and no
+# key is NULL).
+NGRAM_TWINS = {
+    "jaccard": (0.5, dedup.NGRAM_SQL),
+    "containment": (0.8, dedup.CONTAINMENT_SQL),
+    "containment_dir": (0.8, dedup.NGRAM_CONTAINMENT_SQL),
+}
+SAME = "the quick brown fox jumps over the lazy dog"
+
+
+def _gemm_vs_twin(spark, rows, score):
+    threshold, sql = NGRAM_TWINS[score]
+    got = ngram_jaccard_pairs_gemm(_docs(spark, rows), threshold=threshold, score=score)
+    want = run_twin(rows, sql)
+    assert [tuple(r) for r in got.collect()] == want
+    assert want == ngram_pairs_ref(rows, threshold, score)
+    return want
+
+
+@pytest.mark.parametrize("score", sorted(NGRAM_TWINS))
+def test_ngram_gemm_null_doc_id_pairs_nothing(spark, score):
+    rows = [(None, "s", SAME), (1, "s", SAME), (2, "s", SAME), (3, "s", "zzzz")]
+    assert {r[:2] for r in _gemm_vs_twin(spark, rows, score)} <= {(1, 2), (2, 1)}
+
+
+@pytest.mark.parametrize("score", sorted(NGRAM_TWINS))
+def test_ngram_gemm_null_block_pairs_nothing(spark, score):
+    rows = [(1, None, SAME), (2, None, SAME), (3, "s", SAME), (4, "s", SAME)]
+    assert {r[:2] for r in _gemm_vs_twin(spark, rows, score)} <= {(3, 4), (4, 3)}
+
+
+@pytest.mark.parametrize("score", sorted(NGRAM_TWINS))
+def test_ngram_gemm_repeated_doc_id_unions_grams(spark, score):
+    """Doc 1 sits on two rows of one block: its grams are their union
+    (19 + 3), so doc 2, which holds only the first row's 19, scores below
+    1.0 on every measure."""
+    long = "abcdefghijklmnopqrstu"
+    rows = [(1, "s", long), (1, "s", "xyz12"), (2, "s", long + "0123456789"), (3, "s", "zzzz")]
+    want = _gemm_vs_twin(spark, rows, score)
+    assert want and all(q < 1_000_000 for *_, q in want)
 
 
 def test_decode_media_golden(spark):
@@ -458,23 +499,6 @@ def test_rolling_fingerprint_golden(spark):
     assert got == {i: py_roll(t) for i, _, t in rows}
 
 
-def test_hot_posting_circuit_breaker(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import SparkRuntimeException
-
-    from elasticsearch_drift_plugin_spark.operators.dedup import _pair_intersections
-
-    items = spark.createDataFrame(
-        [(i, "x") for i in range(10)], "doc_id long, g string"
-    )
-    ok = _pair_intersections(items, [], "g", max_posting_len=10).collect()
-    assert len(ok) == 45  # C(10,2) pairs from the single posting
-    import pytest as _pytest
-
-    with _pytest.raises((SparkRuntimeException, Py4JJavaError)):
-        _pair_intersections(items, [], "g", max_posting_len=5).collect()
-
-
 def test_asof_join_goldens(spark):
     from elasticsearch_drift_plugin_spark.operators.asof import asof_join
 
@@ -589,7 +613,7 @@ def _cc_bruteforce(edges):
     return {n: find(n) for n in parent}
 
 
-def _cc_spark(spark, edges, **kw):
+def _cc_spark(spark, edges):
     from elasticsearch_drift_plugin_spark.operators.components import (
         connected_components,
     )
@@ -599,7 +623,7 @@ def _cc_spark(spark, edges, **kw):
     )
     return {
         r["node"]: r["component"]
-        for r in connected_components(df, **kw).collect()
+        for r in connected_components(df).collect()
     }
 
 
@@ -626,17 +650,20 @@ def test_components_random_graph_matches_union_find(spark):
     assert _cc_spark(spark, edges) == _cc_bruteforce(edges)
 
 
-def test_components_distributed_path_matches_driver_fast_path(spark):
-    # max_driver_edges=0 forces the large/small-star loop; the default
+def test_components_distributed_path_matches_driver_fast_path(spark, monkeypatch):
+    # MAX_DRIVER_EDGES=0 forces the large/small-star loop; the default
     # routes this small graph through the guarded driver union-find. Both
     # must produce the identical min-reachable-id component map.
     import random
 
+    from elasticsearch_drift_plugin_spark.operators import components
+
     rng = random.Random(7)
     edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
     edges = [(a, b) for a, b in edges if a != b]
-    star = _cc_spark(spark, edges, max_driver_edges=0)
     fast = _cc_spark(spark, edges)
+    monkeypatch.setattr(components, "MAX_DRIVER_EDGES", 0)
+    star = _cc_spark(spark, edges)
     assert star == fast == _cc_bruteforce(edges)
 
 

@@ -99,21 +99,6 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_ngram_postings_no_forced_broadcast(spark):
-    """The per-document gram-count relation is corpus-sized: the postings
-    variant must not hint it broadcast (O(corpus) rows on every executor at
-    scale) — AQE decides from runtime stats instead. A hint would survive
-    analysis as a ResolvedHint node."""
-    from elasticsearch_drift_plugin_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(1, "a", "abcdef"), (2, "a", "abcdeg")],
-        "doc_id long, source string, text string",
-    )
-    out = ngram_jaccard_pairs(docs)
-    assert "ResolvedHint" not in out._jdf.queryExecution().analyzed().toString()
-
-
 def test_flows_by_nation_broadcasts_dimensions(spark, tmp_path):
     from elasticsearch_drift_plugin_spark.operators.relational import flows_by_nation
 

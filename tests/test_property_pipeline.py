@@ -146,27 +146,14 @@ def test_holt_fold_matches_python_model(spark, vals):
 @given(texts=st.lists(st.text(alphabet="abcd", min_size=3, max_size=12),
                       min_size=2, max_size=8))
 def test_containment_matches_bruteforce(spark, texts):
-    """Postings containment == brute-force set arithmetic on arbitrary
-    tiny corpora (threshold 0 => every co-occurring pair emitted)."""
-    from pyspark.sql import Row
+    """GEMM containment == brute-force set arithmetic on arbitrary tiny
+    corpora (threshold 0 => every co-occurring pair emitted)."""
+    from ngram_reference import ngram_pairs_ref
 
-    from elasticsearch_drift_plugin_spark.operators.dedup import containment_pairs
+    from elasticsearch_drift_plugin_spark.operators.dedup import ngram_jaccard_pairs_gemm
 
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, source="s", text=t) for i, t in enumerate(texts)]
-    )
-    got = {(r.doc_a, r.doc_b): r.cont_q
-           for r in containment_pairs(docs, threshold=0.0).collect()}
-    grams = {i: {t[j:j + 3] for j in range(len(t) - 2)}
-             for i, t in enumerate(texts) if len(t) >= 3}
-    want = {}
-    ids = sorted(grams)
-    for ai in range(len(ids)):
-        for bi in range(ai + 1, len(ids)):
-            a, b = ids[ai], ids[bi]
-            inter = len(grams[a] & grams[b])
-            if inter >= 1:
-                import math
-                want[(a, b)] = math.floor(
-                    inter / min(len(grams[a]), len(grams[b])) * 1_000_000)
-    assert got == want
+    rows = [(i, "s", t) for i, t in enumerate(texts)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = [tuple(r) for r in ngram_jaccard_pairs_gemm(
+        docs, threshold=0.0, score="containment").collect()]
+    assert got == ngram_pairs_ref(rows, 0.0, "containment")

@@ -152,32 +152,6 @@ def test_ipv6_canonical_random_groups(spark, seed):
 
 
 # ---------------------------------------------------------------------------
-# BPE batched == sequential on random corpora
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("seed", [3, 11])
-def test_bpe_batched_equals_sequential_random_corpus(spark, seed):
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train_distributed,
-    )
-
-    rng = random.Random(seed)
-    alphabet = "abcdef"
-    words = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randrange(1, 6)))
-        for _ in range(40)
-    ]
-    docs = spark.createDataFrame(
-        [(" ".join(rng.choices(words, k=12)),) for _ in range(25)],
-        "text string",
-    )
-    seq = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12, merge_batch=1, max_driver_vocab=0).collect()]
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12, merge_batch=8, max_driver_vocab=0).collect()]
-    assert seq == bat and len(seq) >= 5
-
-
-# ---------------------------------------------------------------------------
 # 4. query_string parser (r11 second pass): random grammar trees rendered to
 #    Lucene text; the Spark predicate (compile_query) and the DuckDB twin
 #    (compile_query_sql) must select identical hit sets on a shared fixture.

@@ -94,10 +94,11 @@ def test_dsir_sample_is_weight_tilted_subset(spark):
     assert again == ids
 
 
-def test_bpe_train_distributed_matches_driver_backend_random(spark):
+def test_bpe_train_distributed_matches_driver_backend_random(spark, monkeypatch):
     """The JVM fold kernel (round-8 rewrite) must replay the driver
     backend's merge sequence bit-for-bit on corpora with overlap-heavy
     repeats (the 'aaaa' shapes where greedy left-to-right order matters)."""
+    from elasticsearch_drift_plugin_spark.operators import corpus
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
         bpe_train_distributed,
@@ -110,6 +111,7 @@ def test_bpe_train_distributed_matches_driver_backend_random(spark):
         for i in range(40)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12, max_driver_vocab=0).collect()]
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
+    got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12).collect()]
     want = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
     assert got == want

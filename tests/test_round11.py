@@ -393,56 +393,18 @@ def test_sig_terms_queryless_still_needs_explicit_foreground(sig_df):
 # ---------------------------------------------------------------------------
 
 
-def _sennrich_docs(spark):
-    rows = [
-        ("low " * 5).strip(),
-        ("lower " * 2).strip(),
-        ("newest " * 6).strip(),
-        ("widest " * 3).strip(),
-    ]
-    return spark.createDataFrame([(r,) for r in rows], "text string")
-
-
-def test_bpe_batched_bit_identical_sennrich(spark):
+def test_bpe_batched_bit_identical_driver_corpus(spark, monkeypatch):
+    from elasticsearch_drift_plugin_spark.operators import corpus
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
         bpe_train_distributed,
     )
 
-    docs = _sennrich_docs(spark)
-    seq = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10, merge_batch=1, max_driver_vocab=0).collect()]
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10, merge_batch=8, max_driver_vocab=0).collect()]
-    drv = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
-    assert seq == bat == drv
-    # the classic first merges: (e,s) then the CHAINED (es,t), (est,</w>)
-    assert [(m[1], m[2]) for m in seq[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
-
-
-def test_bpe_batched_bit_identical_driver_corpus(spark):
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train_distributed,
-    )
-
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    seq = [tuple(r) for r in bpe_train_distributed(docs, n_merges=20, merge_batch=1, max_driver_vocab=0).collect()]
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=20, merge_batch=8, max_driver_vocab=0).collect()]
-    assert seq == bat
-
-
-def test_bpe_batched_nasty_symbols(spark):
-    """Symbols now enter SQL text (_sql_str escaping) — quotes, backslashes
-    and unicode must fold identically in both loop backends."""
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train_distributed,
-    )
-
-    rows = [("d'o d'o d'o a\\b a\\b éé éé éé",)]
-    docs = spark.createDataFrame(rows * 3, "text string")
-    seq = [tuple(r) for r in bpe_train_distributed(docs, n_merges=6, merge_batch=1, max_driver_vocab=0).collect()]
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=6, merge_batch=8, max_driver_vocab=0).collect()]
-    assert seq == bat and len(seq) >= 3
-    syms = {m[1] for m in seq} | {m[2] for m in seq}
-    assert any("'" in s or "\\" in s or "é" in s for s in syms)
+    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=20).collect()]
+    drv = [tuple(r) for r in bpe_train(docs, n_merges=20).collect()]
+    assert bat == drv
 
 
 def test_sql_str_escaping_round_trips(spark):
@@ -458,7 +420,7 @@ def test_sql_str_escaping_round_trips(spark):
                 assert got == s, (escaped, s, got)
 
 
-def test_hostile_symbol_and_column_name_in_both_parser_modes(spark):
+def test_hostile_symbol_and_column_name_in_both_parser_modes(spark, monkeypatch):
     """A BPE symbol and a column name holding a quote, a backslash and a
     non-ASCII character reach SQL text intact under both settings of
     ``spark.sql.parser.escapedStringLiterals``."""
@@ -468,11 +430,13 @@ def test_hostile_symbol_and_column_name_in_both_parser_modes(spark):
 
     from elasticsearch_drift_plugin_spark import proportional_sum
     from elasticsearch_drift_plugin_spark.memo import scoped_conf
+    from elasticsearch_drift_plugin_spark.operators import corpus
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
         bpe_train_distributed,
     )
 
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
     docs = spark.createDataFrame([("d'o d'o d'o a\\b a\\b éé éé éé",)] * 3, "text string")
     driver = [tuple(r) for r in bpe_train(docs, n_merges=6).collect()]
     name = "st'a\\rté"
@@ -486,9 +450,7 @@ def test_hostile_symbol_and_column_name_in_both_parser_modes(spark):
     )
     for escaped in ("false", "true"):
         with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
-            dist = bpe_train_distributed(
-                docs, n_merges=6, merge_batch=8, max_driver_vocab=0
-            )
+            dist = bpe_train_distributed(docs, n_merges=6)
             assert [tuple(r) for r in dist.collect()] == driver, escaped
             out = proportional_sum(bad, name, "end_ms", "value", interval=10, start=0, end=100)
             with pytest.raises(Exception, match=re.escape(f"field [{name}] must be >= 0")):

@@ -1207,19 +1207,22 @@ def test_search_template_render():
 
 
 def test_containment_vs_jaccard(spark):
+    from ngram_reference import ngram_pairs_ref
+
     from elasticsearch_drift_plugin_spark.operators.dedup import (
-        ngram_containment_pairs,
+        ngram_jaccard_pairs_gemm,
     )
 
     # doc 2 is a strict substring of doc 1: containment(2->1) = 1.0
     # while Jaccard is low (the union is dominated by doc 1)
     long = "the quick brown fox jumps over the lazy dog again and again"
     short = "quick brown fox"
-    docs = spark.createDataFrame(
-        [(1, long, "s"), (2, short, "s"), (3, "unrelated words", "s")],
-        "doc_id int, text string, source string",
+    rows = [(1, long, "s"), (2, short, "s"), (3, "unrelated words", "s")]
+    docs = spark.createDataFrame(rows, "doc_id int, text string, source string")
+    out = ngram_jaccard_pairs_gemm(docs, threshold=0.9, score="containment_dir").collect()
+    assert [tuple(r) for r in out] == ngram_pairs_ref(
+        [(i, src, t) for i, t, src in rows], 0.9, "containment_dir"
     )
-    out = ngram_containment_pairs(docs, threshold=0.9).collect()
     got = {(r.contained, r.container): r.cont_q for r in out}
     assert (2, 1) in got and got[(2, 1)] == 1_000_000
     assert (1, 2) not in got  # direction matters

@@ -249,62 +249,30 @@ DOCS14 = [
 ]
 
 
-def test_containment_dir_gemm_matches_postings(spark):
-    from elasticsearch_drift_plugin_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs_gemm,
-    )
+def test_containment_dir_gemm_matches_postings(spark, monkeypatch):
+    """The directional GEMM mode against the pure-Python model of its
+    twin, whose gram self-join is the postings formulation, at a threshold
+    other than the twin's own."""
+    from ngram_reference import ngram_pairs_ref
+
+    from elasticsearch_drift_plugin_spark.operators import dedup
 
     df = spark.createDataFrame(DOCS14, "doc_id long, source string, text string")
-    want = sorted(
-        tuple(r) for r in ngram_containment_pairs(df, threshold=0.6).collect()
-    )
+    want = ngram_pairs_ref(DOCS14, 0.6, "containment_dir")
     assert want, "fixture must produce containment pairs"
-    for nb in (None, 2):  # auto (1 sub-block) and forced cross-block pairs
-        got = sorted(
+    # auto (1 sub-block), then a 2-doc bound that forces cross-sub-block pairs
+    for bound in (dedup.MAX_BLOCK_ROWS, 2):
+        monkeypatch.setattr(dedup, "MAX_BLOCK_ROWS", bound)
+        got = [
             tuple(r)
-            for r in ngram_jaccard_pairs_gemm(
-                df, threshold=0.6, score="containment_dir", n_subblocks=nb
+            for r in dedup.ngram_jaccard_pairs_gemm(
+                df, threshold=0.6, score="containment_dir"
             ).collect()
-        )
-        assert got == want, f"n_subblocks={nb}"
+        ]
+        assert got == want, f"MAX_BLOCK_ROWS={bound}"
     # directionality: 11 ⊂ 12, never the reverse at 0.6
     pairs = {(a, b) for a, b, _ in want}
     assert (11, 12) in pairs and (12, 11) not in pairs
-
-
-# --- hot-posting degrade path: on_hot='drop_gram' (df-cap) -------------
-
-def test_on_hot_drop_gram_is_subset_filter(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import SparkRuntimeException
-
-    from elasticsearch_drift_plugin_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    df = spark.createDataFrame(DOCS14, "doc_id long, source string, text string")
-    exact = {(r.doc_a, r.doc_b): r.jacc_q
-             for r in ngram_jaccard_pairs(df, threshold=0.3).collect()}
-    # cap low enough to drop shared grams: still runs (no raise), output
-    # is a subset with lower-bound scores — df-cap semantics
-    capped = {(r.doc_a, r.doc_b): r.jacc_q
-              for r in ngram_jaccard_pairs(
-                  df, threshold=0.3, max_posting_len=1, on_hot="drop_gram"
-              ).collect()}
-    assert set(capped) <= set(exact)
-    assert capped == {}  # cap 1 drops every >1-doc posting
-    # a cap above the hottest posting changes nothing
-    same = {(r.doc_a, r.doc_b): r.jacc_q
-            for r in ngram_jaccard_pairs(
-                df, threshold=0.3, max_posting_len=10, on_hot="drop_gram"
-            ).collect()}
-    assert same == exact
-    # the default stays the loud circuit breaker
-    with pytest.raises((SparkRuntimeException, Py4JJavaError)):
-        ngram_jaccard_pairs(df, threshold=0.3, max_posting_len=1).collect()
-    with pytest.raises(ValueError, match="on_hot"):
-        ngram_jaccard_pairs(df, on_hot="bogus").collect()
 
 
 # --- percolate_batch: chunked rule compilation (r14) -------------------

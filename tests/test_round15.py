@@ -10,6 +10,7 @@ import importlib
 from pyspark.sql import functions as F
 
 from elasticsearch_drift_plugin_spark import clear_result_memos
+from elasticsearch_drift_plugin_spark.operators import corpus
 from elasticsearch_drift_plugin_spark.operators.corpus import (
     bpe_train,
     bpe_train_distributed,
@@ -32,20 +33,16 @@ def _bpe_docs(spark):
     return spark.createDataFrame([(r,) for r in rows], "text string")
 
 
-def test_bpe_driver_route_matches_distributed(spark):
+def test_bpe_driver_route_matches_distributed(spark, monkeypatch):
     """A small vocab routes to the driver kernel (default guard); forcing
-    max_driver_vocab=0 keeps the executor-resident loop. Both must emit
+    BPE_DRIVER_VOCAB=0 keeps the executor-resident loop. Both must emit
     the identical merge table — and match the plain driver backend."""
     docs = _bpe_docs(spark)
     routed = [
         tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()
     ]
-    forced = [
-        tuple(r)
-        for r in bpe_train_distributed(
-            docs, n_merges=10, max_driver_vocab=0
-        ).collect()
-    ]
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
+    forced = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()]
     driver = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
     assert routed == forced == driver
     assert [(m[1], m[2]) for m in routed[:3]] == [

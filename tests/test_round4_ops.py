@@ -175,20 +175,24 @@ def test_js_divergence_zero_identical_ln2_disjoint(spark):
 
 
 def test_containment_catches_subdocument_jaccard_misses(spark):
-    small = "abcdefghij"                      # 8 distinct 3-grams
-    big = small + "klmnopqrstuvwxyz0123456789"  # superset, much larger
-    docs = spark.createDataFrame(
-        [Row(doc_id=1, source="s", text=small), Row(doc_id=2, source="s", text=big)]
-    )
+    from ngram_reference import run_twin
+
     from elasticsearch_drift_plugin_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
+        CONTAINMENT_SQL,
+        NGRAM_SQL,
+        ngram_jaccard_pairs_gemm,
     )
 
-    cont = containment_pairs(docs, threshold=0.8).collect()
-    assert [(r.doc_a, r.doc_b, r.cont_q) for r in cont] == [(1, 2, 1_000_000)]
+    small = "abcdefghij"                      # 8 distinct 3-grams
+    big = small + "klmnopqrstuvwxyz0123456789"  # superset, much larger
+    rows = [(1, "s", small), (2, "s", big)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    cont = [tuple(r) for r in ngram_jaccard_pairs_gemm(
+        docs, threshold=0.8, score="containment").collect()]
+    assert cont == run_twin(rows, CONTAINMENT_SQL) == [(1, 2, 1_000_000)]
     # symmetric Jaccard dilutes the quoted doc below its 0.5 threshold
-    assert ngram_jaccard_pairs(docs, threshold=0.5).collect() == []
+    assert ngram_jaccard_pairs_gemm(docs, threshold=0.5).collect() == []
+    assert run_twin(rows, NGRAM_SQL) == []
 
 
 def test_log_odds_surfaces_planted_foreground_term(spark):
@@ -302,7 +306,8 @@ def test_zipf_slope_near_minus_one_on_zipfian_counts(spark):
     assert zipf_slope(uni, top_n=40).collect()[0].slope_mq == 0
 
 
-def test_pagerank_hub_ordering_conservation_determinism(spark):
+def test_pagerank_hub_ordering_conservation_determinism(spark, monkeypatch):
+    from elasticsearch_drift_plugin_spark.operators import components
     from elasticsearch_drift_plugin_spark.operators.components import pagerank
 
     # star: 0 is the hub; plus a detached symmetric pair 10-11
@@ -326,27 +331,30 @@ def test_pagerank_hub_ordering_conservation_determinism(spark):
     again = {r.node: r.rank_q for r in pagerank(edges, n_iter=8).collect()}
     assert again == ranks
     # the driver fast path (default here) and the distributed loop
-    # (forced via max_driver_edges=0) are the same integer recurrence —
+    # (forced via MAX_DRIVER_EDGES=0) are the same integer recurrence —
     # bit-identical fixpoints
-    dist = {
-        r.node: r.rank_q
-        for r in pagerank(edges, n_iter=8, max_driver_edges=0).collect()
-    }
+    monkeypatch.setattr(components, "MAX_DRIVER_EDGES", 0)
+    dist = {r.node: r.rank_q for r in pagerank(edges, n_iter=8).collect()}
     assert dist == ranks
 
 
 def test_containment_gemm_matches_postings_kernel(spark):
+    """The GEMM containment mode against its twin, whose gram self-join is
+    the postings formulation, on the driver's sf0.001 corpus."""
+    from ngram_reference import run_twin
+
     from elasticsearch_drift_plugin_spark.operators.dedup import (
-        containment_pairs,
+        CONTAINMENT_SQL,
         ngram_jaccard_pairs_gemm,
     )
     from elasticsearch_drift_plugin_spark.sources.flows import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    a = containment_pairs(docs, threshold=0.8).collect()
-    b = ngram_jaccard_pairs_gemm(docs, threshold=0.8, score="containment").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) > 0
+    rows = [tuple(r) for r in docs.select("doc_id", "source", "text").collect()]
+    want = run_twin(rows, CONTAINMENT_SQL)
+    got = ngram_jaccard_pairs_gemm(docs, threshold=0.8, score="containment").collect()
+    assert [tuple(r) for r in got] == want
+    assert len(want) > 0
 
 
 def test_geo_polygon_ray_cast_known_points(spark):

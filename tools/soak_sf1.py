@@ -118,7 +118,7 @@ FLAGSHIPS = (
     "es_time_series",
     "es_rank_eval",
     # round-14: the directional GEMM kernel at a scale where the hot
-    # source block (~5k docs) EXCEEDS max_block_rows=4096, so the
+    # source block (~5k docs) EXCEEDS MAX_BLOCK_ROWS=4096, so the
     # cross-sub-block pair path actually engages (nb=2 — the 100 TB
     # shape, untested below sf1); the chunk-compiled batch percolate
     # over the 10x event stream; and the estimator-audit twins whose
