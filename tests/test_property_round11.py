@@ -7,8 +7,8 @@
 2. RFC 5952 renderer (Spark fold) vs Python's ipaddress on random group
    vectors with zero-heavy distributions (the compression-relevant part
    of the space).
-3. BPE batched-vs-sequential equivalence on random small corpora (the
-   bit-identity contract beyond the fixed goldens).
+3. BPE batched distributed loop vs the driver trainer on random small
+   corpora (the bit-identity contract beyond the fixed goldens).
 """
 
 from __future__ import annotations
@@ -149,6 +149,35 @@ def test_ipv6_canonical_random_groups(spark, seed):
     df = spark.createDataFrame([(g,) for g in cases], "gs array<int>")
     got = [r[0] for r in df.select(ipv6_canonical(F.col("gs"))).collect()]
     assert got == [_rfc5952(g) for g in cases]
+
+
+# ---------------------------------------------------------------------------
+# BPE batched == driver on random corpora
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_bpe_batched_equals_sequential_random_corpus(spark, seed, monkeypatch):
+    from elasticsearch_drift_plugin_spark.operators import corpus
+    from elasticsearch_drift_plugin_spark.operators.corpus import (
+        bpe_train,
+        bpe_train_distributed,
+    )
+
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
+    rng = random.Random(seed)
+    alphabet = "abcdef"
+    words = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(1, 6)))
+        for _ in range(40)
+    ]
+    docs = spark.createDataFrame(
+        [(" ".join(rng.choices(words, k=12)),) for _ in range(25)],
+        "text string",
+    )
+    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12).collect()]
+    drv = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
+    assert bat == drv and len(bat) >= 5
 
 
 # ---------------------------------------------------------------------------

@@ -386,11 +386,37 @@ def test_sig_terms_queryless_still_needs_explicit_foreground(sig_df):
 
 
 # ---------------------------------------------------------------------------
-# BPE multi-merge batching (VERDICT r10 item 5): the batched loop must be
-# BIT-IDENTICAL to the sequential argmax loop — same merges, same ranks,
+# BPE multi-merge batching: the batched distributed loop must be
+# BIT-IDENTICAL to the driver argmax trainer — same merges, same ranks,
 # same pair counts — on the Sennrich worked example (whose merges CHAIN:
 # es → est → est</w>, forcing batch truncations) and on the driver corpus.
 # ---------------------------------------------------------------------------
+
+
+def _sennrich_docs(spark):
+    rows = [
+        ("low " * 5).strip(),
+        ("lower " * 2).strip(),
+        ("newest " * 6).strip(),
+        ("widest " * 3).strip(),
+    ]
+    return spark.createDataFrame([(r,) for r in rows], "text string")
+
+
+def test_bpe_batched_bit_identical_sennrich(spark, monkeypatch):
+    from elasticsearch_drift_plugin_spark.operators import corpus
+    from elasticsearch_drift_plugin_spark.operators.corpus import (
+        bpe_train,
+        bpe_train_distributed,
+    )
+
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
+    docs = _sennrich_docs(spark)
+    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()]
+    drv = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
+    assert bat == drv
+    # the classic first merges: (e,s) then the CHAINED (es,t), (est,</w>)
+    assert [(m[1], m[2]) for m in bat[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
 
 
 def test_bpe_batched_bit_identical_driver_corpus(spark, monkeypatch):
@@ -405,6 +431,26 @@ def test_bpe_batched_bit_identical_driver_corpus(spark, monkeypatch):
     bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=20).collect()]
     drv = [tuple(r) for r in bpe_train(docs, n_merges=20).collect()]
     assert bat == drv
+
+
+def test_bpe_batched_nasty_symbols(spark, monkeypatch):
+    """Symbols enter SQL text (sql_str escaping) — quotes, backslashes
+    and unicode must fold identically in the batched loop and the driver
+    trainer."""
+    from elasticsearch_drift_plugin_spark.operators import corpus
+    from elasticsearch_drift_plugin_spark.operators.corpus import (
+        bpe_train,
+        bpe_train_distributed,
+    )
+
+    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
+    rows = [("d'o d'o d'o a\\b a\\b éé éé éé",)]
+    docs = spark.createDataFrame(rows * 3, "text string")
+    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=6).collect()]
+    drv = [tuple(r) for r in bpe_train(docs, n_merges=6).collect()]
+    assert bat == drv and len(bat) >= 3
+    syms = {m[1] for m in bat} | {m[2] for m in bat}
+    assert any("'" in s or "\\" in s or "é" in s for s in syms)
 
 
 def test_sql_str_escaping_round_trips(spark):

@@ -244,9 +244,9 @@ def test_counter_rate_negative_values_stream_equals_batch(spark, tmp_path):
 def test_bpe_train_distributed_matches_driver(spark, monkeypatch):
     """The executor-resident trainer (chained-fold batches, driver holds
     only the count heap) produces the BIT-IDENTICAL merge sequence to the
-    driver backend — on the classic Sennrich golden, symbols that need SQL
-    escaping, small random corpora and a random multi-partition corpus — inside a wall-clock bound (per batch
-    cost = one local job dispatch + a vectorized vocab scan)."""
+    driver backend — on the classic Sennrich golden and on a random
+    multi-partition corpus — inside a wall-clock bound (per batch cost =
+    one local job dispatch + a vectorized vocab scan)."""
     import random
     import time
 
@@ -257,42 +257,13 @@ def test_bpe_train_distributed_matches_driver(spark, monkeypatch):
     )
 
     monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-
-    def both(docs, n_merges):
-        got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=n_merges).collect()]
-        want = [tuple(r) for r in bpe_train(docs, n_merges=n_merges).collect()]
-        assert got == want
-        return want
-
     golden = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
     docs = spark.createDataFrame(
         [(0, " ".join(golden))], "doc_id long, text string"
     )
-    want = both(docs, 12)
-    assert len(want) == 12
-    # the classic first merges: (e,s) then the CHAINED (es,t), (est,</w>)
-    assert [(m[1], m[2]) for m in want[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
-
-    # symbols enter SQL text through sql_str: quotes, backslashes, unicode
-    hostile = spark.createDataFrame(
-        [("d'o d'o d'o a\\b a\\b éé éé éé",)] * 3, "text string"
-    )
-    want = both(hostile, 6)
-    syms = {m[1] for m in want} | {m[2] for m in want}
-    assert len(want) >= 3
-    assert any("'" in s or "\\" in s or "é" in s for s in syms)
-
-    for seed in (3, 11):
-        rng = random.Random(seed)
-        words = [
-            "".join(rng.choice("abcdef") for _ in range(rng.randrange(1, 6)))
-            for _ in range(40)
-        ]
-        small = spark.createDataFrame(
-            [(" ".join(rng.choices(words, k=12)),) for _ in range(25)],
-            "text string",
-        )
-        assert len(both(small, 12)) >= 5, seed
+    want = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
+    got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12).collect()]
+    assert got == want and len(want) == 12
 
     rng = random.Random(11)
     words = [
