@@ -1080,13 +1080,15 @@ def quality_clf(
     and the scoring run on the driver over a dense int64 matrix
     (:func:`_clf_gd_local`) and the scores return as a literal frame.
     Larger inputs, and inputs whose int64 sums could wrap, train through
-    the distributed :func:`_clf_gd` and score map-side. At real scale train
-    on a bounded sample (:func:`quality_clf_sampled`).
+    the distributed :func:`_clf_gd` and score map-side. A repeat call on
+    the same input reuses the trained weights; under the cap it collects
+    the design again and scores on the driver. At real scale train on a
+    bounded sample (:func:`quality_clf_sampled`).
     """
     labels = _clf_labels(docs, target_where)
     design = []
 
-    def train() -> dict[int, int]:
+    def train() -> tuple[dict[int, int], int]:
         # bounded-sample contract, ENFORCED (the lsh_recall_eval
         # discipline): full-batch GD over the whole corpus is never the
         # right call at real scale — train on a sample
@@ -1103,20 +1105,25 @@ def quality_clf(
         feats = _clf_features(docs, dims, n)
         w, d = _clf_train(feats, labels, n, dims, n_iter, lr_num, lr_den)
         design.append(d)
-        return w
+        return w, n
 
     # trained weights are exact-int64 deterministic, so they are reused
     # for the same input and params (the clf family re-ran the identical
-    # train per bench pass otherwise)
+    # train per bench pass otherwise), with the doc count the IDF and the
+    # route need
     key = memo.frame_key(
         docs, "full", target_where, dims, n_iter, lr_num, lr_den, max_train_docs
     )
-    w = memo.get_or_compute("clf_weights", key, docs.sparkSession, train)
-    if design and design[0] is not None:
-        return _clf_score_local(docs.sparkSession, design[0], w, labels)
-    # frozen-weight replay (memo hit, distributed route): one fused
-    # scoring pass — no GD jobs, no (doc, dim) vector materialization
-    return _clf_score_frozen(docs, labels, w, dims)
+    w, n = memo.get_or_compute("clf_weights", key, docs.sparkSession, train)
+    if not design and n <= MAX_CLF_TRAIN_DOCS:
+        # memo hit under the cap: the design again from one Arrow collect
+        design.append(_clf_design(_clf_features(docs, dims, n), labels, dims))
+    d = design[0] if design else None
+    if d is not None and _clf_margins(d, [w[k] for k in sorted(w)]) is not None:
+        return _clf_score_local(docs.sparkSession, d, w, labels)
+    # frozen-weight replay (distributed route): one fused scoring pass —
+    # no GD jobs, no (doc, dim) vector materialization
+    return _clf_score_frozen(docs, labels, w, dims, n)
 
 
 def _clf_labels(docs: DataFrame, target_where: str) -> DataFrame:
@@ -1289,8 +1296,8 @@ def _clf_score_frozen(
     addition is associative, so folding the weight into each term row is
     bit-identical to summing the (doc, dim) vector first, and the
     (doc, dim) exchange plus the intercept union disappear (r14, guide
-    §2.4). Used when no driver design is at hand (memo-hit replays, the
-    distributed route, the sampled trainer's full-corpus pass)."""
+    §2.4). Used when no driver design is at hand (the distributed route,
+    the sampled trainer's full-corpus pass)."""
     from .text import _tfidf_contribs
 
     termsum = (

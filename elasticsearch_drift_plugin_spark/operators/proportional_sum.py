@@ -48,7 +48,7 @@ from ..functions.time import (
     local_ts_to_utc_ms,
     to_epoch_ms,
 )
-from ..params import PSumParams, normalize, prefilter_bounds
+from ..params import PSumParams, normalize, prefilter_bounds, round_key_ms
 
 # Internal column names (prefixed to avoid collision with user columns).
 _S, _E, _V, _KEY, _WEND, _TB = "__ps_s", "__ps_e", "__ps_v", "key", "__ps_wend", "__ps_tb"
@@ -215,8 +215,9 @@ def proportional_sum(
         quantized difference arrays — for flows spanning thousands of
         buckets (requires fixed-width interval + quantize, no extra_aggs;
         measured crossover in :func:`_sweep_fixed`). ``'auto'`` (default):
-        explode, unless the sweep preconditions hold AND a bounded
-        head-sample estimate of buckets-per-flow exceeds
+        explode, unless the sweep preconditions hold, the ``start``/``end``
+        clamp (if both are set) admits ``SWEEP_AUTO_FANOUT`` buckets, AND a
+        bounded head-sample estimate of buckets-per-flow exceeds
         ``SWEEP_AUTO_FANOUT`` — then sweep. Both strategies are
         bit-identical in output.
     """
@@ -290,13 +291,19 @@ def proportional_sum(
     # collapses the fan-out before any shuffle and beats sweep up to a few
     # hundred buckets per flow (sf0.1: 6.8s vs 10.6s at ~60×); sweep's flat
     # cost wins at extreme fan-out (11.5s vs 105s at ~1400×). When the sweep
-    # preconditions hold, auto spends ONE bounded head-sample job (first
-    # `_AUTO_SAMPLE_ROWS` rows, no full scan) estimating avg buckets/flow
-    # and switches to sweep past the measured crossover. Results are
+    # preconditions hold and the [start, end] clamp does not already cap
+    # every flow under the crossover, auto spends ONE bounded head-sample
+    # job (first `_AUTO_SAMPLE_ROWS` rows, no full scan) estimating avg
+    # buckets/flow and switches to sweep past it. Results are
     # bit-identical either way (tests/test_property_psum.py), so a biased
     # head sample can only cost speed, never correctness.
     use_sweep = strategy == "sweep"
-    if strategy == "auto" and sweep_ok and not df.isStreaming:
+    if (
+        strategy == "auto"
+        and sweep_ok
+        and not df.isStreaming
+        and _clamped_fanout(sweep_p) >= SWEEP_AUTO_FANOUT
+    ):
         use_sweep = _estimated_fanout(
             df, start_col, end_col, sweep_p.step_ms
         ) >= SWEEP_AUTO_FANOUT
@@ -380,7 +387,7 @@ def proportional_sum(
         # the operator's own [start, end] query range is inclusive of the
         # terminal bucket (SURVEY §2 row 11) and both engines + the DuckDB
         # oracle share round_key_ms, so the contract is self-consistent.
-        from ..params import local_ms_to_utc, round_key_ms
+        from ..params import local_ms_to_utc
 
         hb_lo = round_key_ms(p, p.hard_bounds[0])
         hb_hi = round_key_ms(p, p.hard_bounds[1])
@@ -867,6 +874,16 @@ SWEEP_AUTO_FANOUT = 500
 _AUTO_SAMPLE_ROWS = 1024
 
 
+def _clamped_fanout(p: PSumParams) -> float:
+    """The most buckets any flow can reach under the query's ``[start,
+    end]`` clamp on ``p``'s fixed grid; unbounded without both clamps.
+    The head sample measures unclamped widths, so this bound decides the
+    route when it is under the crossover — with no job at all."""
+    if p.start is None or p.end is None:
+        return float("inf")
+    return (round_key_ms(p, p.end) - round_key_ms(p, p.start)) // p.step_ms + 1
+
+
 def _estimated_fanout(
     df: DataFrame, start_col: str, end_col: str, step_ms: int,
     sample_rows: int = _AUTO_SAMPLE_ROWS,
@@ -946,7 +963,7 @@ def _fill_empty_buckets(
     )
     local_fixed = p.kind == "fixed" and p.tz is not None
     if p.extended_bounds is not None:
-        from ..params import local_ms_to_utc, round_key_ms
+        from ..params import local_ms_to_utc
 
         lo = round_key_ms(p, p.extended_bounds[0])
         hi = round_key_ms(p, p.extended_bounds[1])

@@ -52,6 +52,19 @@ def _default_driver_memory() -> str:
     return "8g"
 
 
+# Janino-generated classes kept compiled per JVM
+# (spark.sql.codegen.cache.maxEntries, Spark's default 100). The cache is an
+# LRU, and the engine's working sets cycle: one curation pass over a shard
+# (dedup, n-gram, MinHash, classifier, DSIR, BPE, kNN) uses 162-180
+# distinct classes, the dashboard panel templates ~110, the export windows
+# ~40. Under 100 entries every curation class is evicted
+# before its next use, so each later shard pass compiled ~150 classes
+# again, and the JIT compiled their new bytecode again; at 1024 it compiles
+# 0-4 (4 cores, 400-doc shards), and Metaspace after three passes is lower,
+# 169 -> 163 MB. 1024 holds those working sets together with headroom.
+CODEGEN_CACHE_ENTRIES = 1024
+
+
 def get_spark(app_name: str = "spark-drift", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -71,6 +84,8 @@ def get_spark(app_name: str = "spark-drift", cpus: int | None = None) -> SparkSe
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # a static conf: a session created before this call keeps 100
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local mode: the driver IS the executor — 8g for 32 task threads
         # caused measurable GC stalls across a 200-query session (r10:
         # es_search_nested 5.3s -> 1.2s, es_search_ip_range 8.6s -> 2.1s,

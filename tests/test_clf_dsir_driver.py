@@ -7,7 +7,8 @@
 2. The driver kernel ``_clf_gd_local`` returns exactly the weight map of
    the distributed loop ``_clf_gd`` on the same pinned features, including
    inputs whose margins reach both clip ends of the hard-sigmoid.
-3. Where an int64 sum of the kernel could wrap, it declines, and the
+3. A memo hit scores on the driver, with the first call's rows.
+4. Where an int64 sum of the kernel could wrap, it declines, and the
    routed train falls back to the distributed loop, where ANSI mode raises.
 """
 
@@ -129,6 +130,26 @@ def test_driver_kernel_matches_distributed_loop(spark, seed):
     assert m.min() < -2 * 10**12 and m.max() > 2 * 10**12
     h = corpus._hardsig_np(m)
     assert h.min() == 0 and h.max() == corpus.QUANT
+
+
+@pytest.mark.parametrize("seed", [11, 12])
+def test_memo_hit_scores_on_the_driver(spark, monkeypatch, seed):
+    """A second call on the same input reuses the trained weights and, under
+    the training cap, scores them on the driver: no train, no fused
+    frozen-weight pass, and the rows of the first call, including those of
+    the duplicated and the NULL doc id."""
+    from elasticsearch_drift_plugin_spark import memo
+
+    memo.clear("clf_weights")
+    docs = _random_docs(spark, seed)
+    fresh = [tuple(r) for r in corpus.quality_clf(docs, dims=16).collect()]
+
+    def refuse(*a, **k):
+        raise AssertionError("memo hit left the driver route")
+
+    monkeypatch.setattr(corpus, "_clf_train", refuse)
+    monkeypatch.setattr(corpus, "_clf_score_frozen", refuse)
+    assert [tuple(r) for r in corpus.quality_clf(docs, dims=16).collect()] == fresh
 
 
 def test_driver_kernel_declines_where_int64_could_wrap(spark):

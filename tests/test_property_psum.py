@@ -11,8 +11,10 @@ sampling) and random interval/offset/clamp parameters.
 
 from __future__ import annotations
 
+import importlib
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -312,6 +314,63 @@ def test_auto_strategy_picks_sweep_on_wide_ranges(spark):
     assert [tuple(r) for r in auto_wide.collect()] == [
         tuple(r) for r in explode.collect()
     ]
+
+
+def test_auto_strategy_bounded_clamp_skips_probe(spark, monkeypatch):
+    """With both clamps set, buckets per flow are at most
+    (round(end) - round(start)) / step + 1; under SWEEP_AUTO_FANOUT auto
+    explodes without the head-sample job, even over flows whose unclamped
+    width is past the crossover. Without both clamps it still probes."""
+    # the package re-exports the function under the module's name
+    psum_mod = importlib.import_module(
+        "elasticsearch_drift_plugin_spark.operators.proportional_sum"
+    )
+
+    def no_probe(*a, **k):
+        raise AssertionError("probed")
+
+    monkeypatch.setattr(psum_mod, "_estimated_fanout", no_probe)
+    step = 100
+    wide = spark.createDataFrame(
+        [(0, step * psum_mod.SWEEP_AUTO_FANOUT * 4, 10.0, None)] * 3, SCHEMA
+    )
+    kw = dict(interval=step, quantize=6)
+    start, end = step * 200 + 50, step * 400
+    auto = proportional_sum(wide, "start_ms", "end_ms", "value", "sampling",
+                            start=start, end=end, **kw)
+    assert "Window" not in auto._jdf.queryExecution().executedPlan().toString()
+    # a calendar unit of constant width takes the same fixed-grid bound
+    proportional_sum(wide, "start_ms", "end_ms", "value", "sampling",
+                     calendar_interval="minute", quantize=6, start=0, end=3_600_000)
+    wide_clamp = step * (psum_mod.SWEEP_AUTO_FANOUT - 1)
+    with pytest.raises(AssertionError, match="probed"):
+        proportional_sum(wide, "start_ms", "end_ms", "value", "sampling",
+                         start=0, end=wide_clamp, **kw)
+    with pytest.raises(AssertionError, match="probed"):
+        proportional_sum(wide, "start_ms", "end_ms", "value", "sampling",
+                         start=start, **kw)
+
+
+def test_auto_strategy_bounded_clamp_matches_both_routes(spark):
+    """Flows far longer than the clamp: the statically chosen route gives
+    exactly what explicit explode and sweep give."""
+    rows = [
+        (0, 9_000_000, 10.0, None),
+        (1_234_567, 50_000_000, 3.5, 2.0),
+        (2_000_000, 2_000_000, 1.0, None),
+        (100_000, 3_100_001, 7.25, None),
+        (2_950_000, 80_000_000, None, None),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    kw = dict(interval=60_000, quantize=6, start=1_000_123, end=3_000_000, min_doc_count=0)
+
+    def run(**extra):
+        return [tuple(r) for r in proportional_sum(
+            df, "start_ms", "end_ms", "value", "sampling", **kw, **extra).collect()]
+
+    auto = run()
+    assert auto == run(strategy="explode") == run(strategy="sweep")
+    assert len(auto) == (3_000_000 - 960_123) // 60_000 + 1
 
 
 from elasticsearch_drift_plugin_spark.functions.time import local_ts_to_utc_ms

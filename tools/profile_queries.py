@@ -12,6 +12,11 @@ cumulative steal counter; a run whose window saw more than
 ``STEAL_TICKS_MAX`` ticks (10 ms each) of steal is discarded and
 retried, so reported numbers are from clean windows only.
 
+Compilation: per query the Janino classes compiled and the
+JVM JIT compiler's milliseconds summed over the clean timed repetitions
+(``CodegenMetrics`` count, ``CompilationMXBean`` total), so a query that
+recompiles its generated code on every run shows it.
+
 Usage: python tools/profile_queries.py [sf_dir] [out_json] [name ...]
 """
 
@@ -41,6 +46,14 @@ def _steal_ticks() -> int:
         return 0
 
 
+def _compile_counters(spark):
+    """() -> (Janino compiles, JIT ms) so far in this JVM."""
+    jvm = spark._jvm
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return lambda: (janino.getCount(), jit.getTotalCompilationTime())
+
+
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = args[0] if args else os.environ.get(
@@ -51,6 +64,7 @@ def main() -> None:
     spark = get_spark("spark-drift-profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
+    compiled = _compile_counters(spark)
     # session warmup
     qs["dedup_exact"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     rows = {}
@@ -64,16 +78,19 @@ def main() -> None:
         clean = 0
         dirty = 0
         attempts = 0
+        janino = jit_ms = 0
         while clean < 2 and attempts < 2 + MAX_RETRIES:
             attempts += 1
             # memo-cold per repetition, same as the committed bench loop
             clear_result_memos()
             s0 = _steal_ticks()
+            c0 = compiled()
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
+            c1 = compiled()
             # steal budget scales with the window's CPU exposure: a fixed
             # 25-tick cap rejects every multi-second 32-core window on
             # this host (r15 — the mm_* family measured 0 clean runs out
@@ -90,6 +107,7 @@ def main() -> None:
                 dirty += 1
                 continue
             clean += 1
+            janino, jit_ms = janino + c1[0] - c0[0], jit_ms + c1[1] - c0[1]
             t_con = t1 - t0 if t_con is None else min(t_con, t1 - t0)
             t_exe = t2 - t1 if t_exe is None else min(t_exe, t2 - t1)
         rows[name] = {
@@ -98,6 +116,8 @@ def main() -> None:
             "total": (
                 round(t_con + t_exe, 3) if t_con is not None else None
             ),
+            "janino_compiles": janino,
+            "jit_ms": jit_ms,
             "clean_runs": clean,
             "stolen_runs": dirty,
         }
@@ -109,7 +129,9 @@ def main() -> None:
     tot_e = sum(r["exec"] for r in done)
     print(json.dumps({"n": len(rows), "n_clean": len(done),
                       "construct_sum": round(tot_c, 2),
-                      "exec_sum": round(tot_e, 2)}))
+                      "exec_sum": round(tot_e, 2),
+                      "janino_compiles": sum(r["janino_compiles"] for r in done),
+                      "jit_ms": sum(r["jit_ms"] for r in done)}))
 
 
 if __name__ == "__main__":
