@@ -226,10 +226,9 @@ BENCH_QUERIES = [
     "mm_scene_changes",
     "emb_matryoshka_eval",
     "train_span_ul2x",
-    # r8 additions: DSIR importance resampling + the pure-JVM BPE loop
+    # r8 additions: DSIR importance resampling
     "corpus_dsir_weights",
     "corpus_dsir_sample",
-    "corpus_bpe_train_dist",
     # r9 additions: the finished trained quality gate + clf-gated curate
     "corpus_quality_clf",
     "train_curate_clf",
@@ -325,10 +324,9 @@ BENCH_QUERIES = [
 # round's new registrations belong here, so the warmup cost stays
 # bounded while established queries keep their cheap 2-shot timing.
 FIRST_WINDOW_WARMUP = [
-    # r15 adds no new registrations; these three run their first committed
-    # window under structurally NEW plans (BPE driver routing + Arrow
-    # literal frames; the single-pass more_like_this seed collect)
-    "corpus_bpe_train_dist",
+    # no new registrations; these two run under plans whose shape changed
+    # since their last committed window (corpus_bpe_train returns an Arrow
+    # literal frame, es_more_like_this collects its seeds in one pass)
     "corpus_bpe_train",
     "es_more_like_this",
 ]

@@ -49,7 +49,7 @@ from ..functions.sql_literal import literal_frame
 # not corpus size). Below this many edges the transitive closure runs as
 # a driver union-find over one bounded collect — the same "bounded
 # control-plane fetch behind an explicit guard" contract as the k-means
-# centroid and BPE merge loops — instead of 2-4 distributed star rounds
+# centroid loop — instead of 2-4 distributed star rounds
 # of ~6 stages each. Above it, the large/small-star loop (the 100 TB
 # shape) runs unchanged. Both produce component = min reachable id, so
 # results are identical by construction (pytest-pinned both ways). Read at
@@ -160,7 +160,7 @@ def connected_components(
     # materializes the round's edge set and computes its fingerprint —
     # eager=True spent a second, separate materialization job per round for
     # the same lineage cap (guide §1.2: fewer jobs/passes before per-task
-    # tuning; the BPE merge loop documents the same trick)
+    # tuning)
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))

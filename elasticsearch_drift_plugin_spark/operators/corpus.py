@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.hashing import HEX15_SQL_FN, md5_hash60
-from ..functions.sql_literal import literal_frame, sql_str
+from ..functions.sql_literal import literal_frame
 from ..sources.flows import load_table
 
 QUANT = 1_000_000
@@ -1234,11 +1234,11 @@ def _clf_score_local(spark, design: dict, w: dict[int, int], labels: DataFrame) 
     return literal_frame(spark, t, f"doc_id {id_type}, y bigint, clf_q bigint")
 
 
-# Loops that run one tiny-aggregate job per step (the BPE merge loop, the
-# classifier's distributed GD loop over the training cap): AQE's
-# per-query replanning and a 32-way shuffle add ~0.25 s/job of pure
-# overhead on frames bounded by the step's output, so both are scoped off
-# for the loop — one small partition at any input size.
+# Loops that run one tiny-aggregate job per step (the classifier's
+# distributed GD loop over the training cap): AQE's per-query replanning
+# and a 32-way shuffle add ~0.25 s/job of pure overhead on frames bounded
+# by the step's output, so both are scoped off for the loop — one small
+# partition at any input size.
 _TINY_JOB_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "1",
@@ -1292,25 +1292,28 @@ def _clf_score_frozen(
     n_docs: int | None = None,
 ) -> DataFrame:
     """Frozen-weight scoring fused over the per-term contributions:
-    ``m12 = Σ_terms sign·tf·idf·w[dim(term)] + QUANT·w[-1]`` — int64
+    ``m12 = Σ_terms sign·tf·idf·w[dim(term)] + Σ_rows QUANT·w[-1]`` — int64
     addition is associative, so folding the weight into each term row is
     bit-identical to summing the (doc, dim) vector first, and the
-    (doc, dim) exchange plus the intercept union disappear (r14, guide
-    §2.4). Used when no driver design is at hand (the distributed route,
-    the sampled trainer's full-corpus pass)."""
+    (doc, dim) exchange disappears (r14, guide §2.4). As in
+    :func:`quality_clf_sql`, a doc id gets one intercept per source row and
+    a NULL doc id joins no label row. Used when no driver design is at hand
+    (the distributed route, the sampled trainer's full-corpus pass)."""
     from .text import _tfidf_contribs
 
-    termsum = (
+    icpt = labels.select(
+        "doc_id", F.lit(-1).cast("long").alias("dim"), F.lit(QUANT).cast("long").alias("c")
+    )
+    margins = (
         _tfidf_contribs(docs, dims, n_docs)
+        .unionByName(icpt)
         .withColumn("wq", _wmap_col(w)[F.col("dim")])
         .groupBy("doc_id")
-        .agg(F.sum(F.expr("c * coalesce(wq, 0)")).alias("__ts"))
+        .agg(F.sum(F.expr("c * coalesce(wq, 0)")).alias("m12"))
     )
-    icpt = int(QUANT) * int(w[-1])
-    m12_sql = f"(coalesce(__ts, CAST(0 AS BIGINT)) + CAST({icpt} AS BIGINT))"
     return (
-        labels.join(termsum, "doc_id", "left")
-        .select("doc_id", "y", F.expr(_hardsig_q(m12_sql)).alias("clf_q"))
+        labels.join(margins, "doc_id")
+        .select("doc_id", "y", F.expr(_hardsig_q("m12")).alias("clf_q"))
         .orderBy("doc_id")
     )
 
@@ -1417,7 +1420,7 @@ def _wmap_col(w: dict[int, int]):
     Column-algebra spelling (``F.create_map`` over 130 ``F.lit`` calls)
     costs ~95 ms of driver-side Py4J per call — the GD loop calls this
     every iteration, so the clf family was paying ~0.8 s/query of pure
-    plan-building (the corpus_bpe_train_dist r11 finding, same cause).
+    plan-building.
     Keys/values are ints, so no string escaping is involved; values take
     the BIGINT literal suffix to keep the map type stable regardless of
     magnitude."""
@@ -2023,8 +2026,7 @@ def bpe_train(
 def _bpe_merge_loop(
     vocab: list, freq: list, n_merges: int
 ) -> list:
-    """The incremental driver BPE kernel shared by :func:`bpe_train` and
-    the small-vocab fast path of :func:`bpe_train_distributed`: pair→word
+    """The incremental BPE kernel of :func:`bpe_train`: pair→word
     inverted index + lazy max-heap; ``vocab`` is a list of per-word symbol
     lists (mutated in place), ``freq`` the aligned word counts. Output is
     independent of word order (counts are order-free integer sums)."""
@@ -2092,305 +2094,6 @@ def _bpe_merge_frame(spark, merges: list) -> DataFrame:
     return literal_frame(
         spark, merges, "rank long, left string, right string, pair_count long"
     )
-
-
-#: Below this many vocab words the distributed merge loop routes to the
-#: driver kernel (same guarded-fast-path contract as
-#: components.MAX_DRIVER_EDGES): driver state is O(vocab · avg_len) — a
-#: 100k-word vocab is a few tens of MB — while the executor-resident loop
-#: pays ~1 job per accepted-merge batch. Read at call time; <= 0 forces the
-#: executor-resident loop.
-BPE_DRIVER_VOCAB = 100_000
-
-#: Most merges the executor-resident loop folds into one Spark job.
-BPE_MERGE_BATCH = 8
-
-
-def bpe_train_distributed(
-    docs: DataFrame,
-    n_merges: int = 50,
-    max_vocab: int = 50_000,
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`bpe_train` with the vocab table resident on the EXECUTORS —
-    the shape for vocabularies too large (or merge counts too long) for a
-    driver-held symbol table. Bit-identical merge sequence to the driver
-    backend (same argmax key, same left-to-right merge rule), pinned by
-    pytest equality on the goldens and a random corpus, and driver-checked
-    against the same unrolled-replay oracle as ``corpus_bpe_train``.
-
-    Per merge, ONE codegen'd job over the partitioned vocab: an
-    ``aggregate`` fold applies the winning pair left-to-right (provably
-    the same result as the driver kernel's in-place scan — the merged
-    token ``left+right`` can never equal ``left``, so a fresh merge never
-    re-merges in the same pass), and the changed rows' old/new adjacent
-    pairs explode into ±count PAIR DELTAS that one tiny aggregate ships
-    to the driver. The driver folds them into its count heap — driver
-    state is O(#distinct pairs), never O(vocab · avg_len). A lazy
-    ``localCheckpoint`` per merge (materialized by that same delta job)
-    caps lineage at O(1). No Python executes anywhere in the loop: the
-    earlier Arrow ``mapInPandas`` kernel paid a ~350 ms Python-worker
-    round trip per merge; the fold is whole-stage-codegen'd JVM.
-
-    Cost model: the per-merge job costs the local dispatch floor
-    (~80 ms) + an O(vocab/partitions) vectorized scan — at cluster
-    scale the scan is the win (no driver pinning, no corpus-sized
-    collect); below ~100k merges on a laptop the driver backend is
-    faster because dispatch dominates. Both backends share the
-    corpus-sized word-count stage; only the Zipf-bounded vocab iterates.
-
-    r15: vocabularies at or below :data:`BPE_DRIVER_VOCAB` (<= 0 forces
-    distributed) route to the shared driver kernel off the already-counted
-    vocab — the components-guard contract: the word-frequency stage is
-    distributed either way, only the Zipf-bounded merge loop moves, and
-    the merge table is bit-identical.
-
-    r11: up to :data:`BPE_MERGE_BATCH` merges run as CHAINED folds in ONE
-    job, with per-step tagged deltas and a driver-side sequential-argmax
-    replay that truncates the batch at the first divergence, so the merge
-    sequence stays bit-identical to the driver kernel's one-merge-at-a-
-    time argmax — pinned by pytest equality against :func:`bpe_train` on
-    the Sennrich worked example, the driver corpus, hostile symbols and
-    random corpora. Equally load-bearing: each round's projections are
-    built as ONE selectExpr SQL string (symbols spliced in via
-    ``sql_str``) — the Column-algebra spelling spent ~250 ms/round on
-    driver-side Py4J chatter, dwarfing the fold itself. Measured at sf0.1
-    (30 merges): 2.3 s / 24 jobs, against 5.7 s / 30 jobs for the
-    one-job-per-merge loop this replaced (merge chains bound acceptance:
-    early BPE argmaxes immediately involve the token just created, and
-    bit-identity forbids speculating past them — the AIMD batch size
-    tracks that structure).
-    """
-    spark = docs.sparkSession
-    wc = (
-        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w"))
-        .where(F.length("w") >= 1)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "w")
-        .limit(int(max_vocab))
-    )
-    vocab = wc.select(
-        "w", "c",
-        F.concat(F.split("w", ""), F.array(F.lit(BPE_END))).alias("syms"),
-    ).localCheckpoint(eager=False)
-    # lazy checkpoint: the count below is the first action, so ONE job both
-    # materializes the word-count table and returns its size (the
-    # components-loop trick)
-    n_rows = vocab.count()
-    guard = BPE_DRIVER_VOCAB
-    if guard > 0 and n_rows <= guard:
-        # Small-vocab fast path (r15, VERDICT r14 item 6 — the
-        # components-style guard): the merge loop is driver-bounded by the
-        # vocab the distributed path ALREADY collected counts over, so one
-        # bounded (w, c) collect + the shared incremental kernel replaces
-        # ~n_merges/BPE_MERGE_BATCH executor jobs. Bit-identical by
-        # construction — both backends run the same argmax key and merge
-        # rule (pytest-pinned equality), and the merge table is
-        # independent of word order.
-        rows = vocab.select("w", "c").collect()
-        merges = _bpe_merge_loop(
-            [list(r.w) + [BPE_END] for r in rows],
-            [int(r.c) for r in rows],
-            int(n_merges),
-        )
-        return _bpe_merge_frame(spark, merges)
-    # size the iterated frame to the vocab, not to the cluster: a
-    # Zipf-bounded vocab spread over 32 near-empty partitions multiplies
-    # the per-merge task floor for zero parallelism gain. ~8k words per
-    # partition keeps task payloads real; a max_vocab-sized table still
-    # fans out fully.
-    n_parts = max(1, min(spark.sparkContext.defaultParallelism, n_rows // 8192))
-    vocab = vocab.repartition(n_parts).localCheckpoint(eager=True)
-
-    # initial pair counts: one aggregation, result bounded by the distinct
-    # adjacent-pair count (alphabet²-ish), never vocab-sized rows × length
-    init = (
-        vocab.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " i -> struct(syms[i - 1] AS l, syms[i] AS r))"
-                )
-            ).alias("p"),
-            "c",
-        )
-        .groupBy("p.l", "p.r")
-        .agg(F.sum("c").alias("n"))
-        .collect()
-    )
-    import heapq
-
-    counts: dict[tuple[str, str], int] = {(r.l, r.r): int(r.n) for r in init}
-    heap = [(-c, p) for p, c in counts.items()]
-    heapq.heapify(heap)
-
-    merges: list[tuple[int, str, str, int]] = []
-    with memo.scoped_conf(spark, _TINY_JOB_CONF):
-        _run_merge_loop_batched(vocab, counts, heap, merges, int(n_merges))
-    return _bpe_merge_frame(spark, merges)
-
-
-_TAGGED_PAIR_T = "array<struct<m:int,l:string,r:string,d:long>>"
-
-
-def _bpe_fold_step_sql(prev: str, left: str, right: str) -> str:
-    """One BPE merge as a left-to-right fold, as SQL text over the plain
-    column ``prev`` — the driver kernel's left-to-right merge rule
-    (merged token can never equal ``left``, so a fresh merge never
-    re-merges in the same pass; ``get`` is 0-based and NULL-safe on the
-    empty acc)."""
-    lit_l, lit_r = sql_str(left), sql_str(right)
-    lit_m = sql_str(left + right)
-    return (
-        f"aggregate({prev}, CAST(array() AS array<string>), (acc, x) ->"
-        f" CASE WHEN get(acc, size(acc) - 1) <=> {lit_l} AND x = {lit_r}"
-        f" THEN concat(slice(acc, 1, size(acc) - 1), array({lit_m}))"
-        f" ELSE concat(acc, array(x)) END)"
-    )
-
-
-def _adj_pairs_tagged_sql(col: str, sign: int, tag: int) -> str:
-    """±c-weighted adjacent-pair structs of the plain symbol-array column
-    ``col``, tagged with the in-batch merge index ``m``, as SQL text
-    (typed empty below 2 symbols — ``sequence(1, 0)`` would DESCEND)."""
-    return (
-        f"CASE WHEN size({col}) < 2 THEN CAST(array() AS {_TAGGED_PAIR_T})"
-        f" ELSE transform(sequence(1, size({col}) - 1), i -> struct("
-        f"{tag} AS m, get({col}, i - 1) AS l, get({col}, i) AS r,"
-        f" CAST({sign} * c AS BIGINT) AS d)) END"
-    )
-
-
-def _run_merge_loop_batched(vocab, counts, heap, merges, n_merges):
-    """Multi-merge batching (r11): up to :data:`BPE_MERGE_BATCH` merges per
-    Spark job instead of one — a one-merge-per-job loop's cost floor IS the
-    job dispatch (VERDICT r10: corpus_bpe_train_dist, the slowest bench
-    query), so amortize it.
-
-    BIT-IDENTICAL to the one-merge-at-a-time argmax by construction, not
-    by heuristic: the batch candidates are applied as CHAINED folds inside
-    one job (chained folds ARE sequential application), each step's pair
-    deltas come back tagged with the step index, and the driver REPLAYS
-    sequential argmax over those per-step deltas — the first step whose
-    true argmax (max count, ties by smallest pair, the heap order) is not
-    the batched candidate truncates the batch there. The truncated state
-    costs nothing to recover: every intermediate symbol state s0..sk is
-    materialized in the same localCheckpoint (ONE ``states`` array column
-    whose fold evaluates each step once, via lazily-branched CASE — the
-    naive chained-column spelling re-inlines the prefix folds per column,
-    O(k²) work), so the loop resumes from ``states[prefix]``. Candidate
-    selection prefers closure-disjoint pairs ({left, right, left+right}
-    non-overlapping) because those rarely perturb each other's counts —
-    but that is ONLY a hit-rate heuristic; correctness comes from the
-    replay. Step 1 always validates (it is the true argmax at selection
-    time), so every round makes progress. The batch size ADAPTS (AIMD:
-    double on full acceptance, shrink to the accepted prefix on
-    truncation, capped by :data:`BPE_MERGE_BATCH`) because early BPE
-    rounds chain — each merged token immediately spawns the next top pair,
-    so big speculative batches mostly truncate — while the Zipf tail
-    flattens and accepts full batches.
-    """
-    import heapq
-
-    k_cur = 1  # adaptive: chains dominate early — start sequential-sized
-    while len(merges) < n_merges:
-        while heap and counts.get(heap[0][1], 0) != -heap[0][0]:
-            heapq.heappop(heap)
-        if not heap or -heap[0][0] < 2:
-            break
-        k_target = min(k_cur, n_merges - len(merges))
-        cand: list[tuple[str, str]] = []
-        seen: set[tuple[str, str]] = set()
-        closure: set[str] = set()
-        for negc, pair in sorted(heap):
-            c = counts.get(pair, 0)
-            if c != -negc or c < 2 or pair in seen:
-                continue
-            seen.add(pair)
-            cl = {pair[0], pair[1], pair[0] + pair[1]}
-            if cand and (cl & closure):
-                continue
-            cand.append(pair)
-            closure |= cl
-            if len(cand) == k_target:
-                break
-        k = len(cand)
-
-        # ONE job, TWO Py4J-cheap selectExpr calls: the whole batch folds
-        # as CHAINED SELECT STAGES — each s_i is its own projection
-        # referencing s_{i-1} by NAME, and CollapseProject refuses to
-        # inline a non-cheap expression (aggregate) referenced twice, so
-        # each step evaluates exactly once (a hand-nested expression tree
-        # would recompute the prefix per column, O(k²)). SQL-text building
-        # matters: the Column-algebra spelling costs ~250 ms/round of
-        # driver-side Py4J chatter — more than the Spark job itself.
-        stepped = vocab.selectExpr("w", "c", "syms AS s0")
-        for i, (left, right) in enumerate(cand, 1):
-            stepped = stepped.selectExpr(
-                "*", f"{_bpe_fold_step_sql(f's{i - 1}', left, right)} AS s{i}"
-            )
-        stepped = stepped.localCheckpoint(eager=False)
-        darrs = ", ".join(
-            f"CASE WHEN s{i} != s{i - 1} THEN concat("
-            f"{_adj_pairs_tagged_sql(f's{i - 1}', -1, i)},"
-            f" {_adj_pairs_tagged_sql(f's{i}', +1, i)})"
-            f" ELSE CAST(array() AS {_TAGGED_PAIR_T}) END"
-            for i in range(1, k + 1)
-        )
-        rows = (
-            stepped.selectExpr(f"explode(concat({darrs})) AS p")
-            .groupBy("p.m", "p.l", "p.r")
-            .agg(F.sum("p.d").alias("d"))
-            .where("d <> 0")
-            .collect()
-        )
-        per_tag: dict[int, list] = {}
-        for r in rows:
-            per_tag.setdefault(int(r.m), []).append((r.l, r.r, int(r.d)))
-
-        # driver replay of the sequential argmax over per-step deltas
-        cur = dict(counts)
-        prefix = 0
-        stop = False
-        for i, pair in enumerate(cand, 1):
-            if not cur:
-                stop = True
-                break
-            negc, amax = min((-c, p) for p, c in cur.items())
-            if -negc < 2:
-                stop = True
-                break
-            if amax != pair:
-                break  # sequential diverges here — truncate the batch
-            merges.append((len(merges), pair[0], pair[1], -negc))
-            prefix = i
-            for dl, dr, dd in per_tag.get(i, ()):
-                c2 = cur.get((dl, dr), 0) + dd
-                if c2 > 0:
-                    cur[(dl, dr)] = c2
-                else:
-                    cur.pop((dl, dr), None)
-
-        # commit the accepted prefix into the live counts + heap
-        for i in range(1, prefix + 1):
-            for dl, dr, dd in per_tag.get(i, ()):
-                p = (dl, dr)
-                c2 = counts.get(p, 0) + dd
-                if c2 > 0:
-                    counts[p] = c2
-                    heapq.heappush(heap, (-c2, p))
-                else:
-                    counts.pop(p, None)
-        if prefix:
-            vocab = stepped.select(
-                "w", "c", F.col(f"s{prefix}").alias("syms")
-            )
-        if stop or prefix == 0:
-            break
-        # AIMD batch sizing: full acceptance → double; truncation →
-        # shrink to what sequential actually took
-        k_cur = min(BPE_MERGE_BATCH, k_cur * 2) if prefix == k else max(1, prefix)
 
 
 def bpe_encode(
@@ -2804,13 +2507,6 @@ def queries() -> dict:
         "corpus_bpe_train": lambda s, d: bpe_train(
             load_table(s, d, "documents"), n_merges=30
         ),
-        # the executor-resident backend against the SAME unrolled-replay
-        # oracle: the bit-identity claim is driver-checked, not pytest-only.
-        # This small vocab takes the BPE_DRIVER_VOCAB driver route; the
-        # executor-resident loop is for vocabularies the driver can't pin.
-        "corpus_bpe_train_dist": lambda s, d: bpe_train_distributed(
-            load_table(s, d, "documents"), n_merges=30
-        ),
         "corpus_bpe_encode": lambda s, d: bpe_encode(
             load_table(s, d, "documents"),
             bpe_train(load_table(s, d, "documents"), n_merges=30),
@@ -2886,7 +2582,6 @@ def oracle_sql() -> dict:
         "corpus_top_ngrams": top_ngrams_sql(),
         "corpus_bpe_pairs": bpe_pairs_sql(),
         "corpus_bpe_train": bpe_train_sql(n_merges=30),
-        "corpus_bpe_train_dist": bpe_train_sql(n_merges=30),
         "corpus_chunk": chunk_documents_sql(chunk_tokens=32, overlap=8),
         "corpus_log_odds": log_odds_sql(),
         "corpus_dsir_weights": dsir_weights_sql(),

@@ -6,7 +6,8 @@
    distributed GD loop and the two-pass DSIR fit they replaced.
 2. The driver kernel ``_clf_gd_local`` returns exactly the weight map of
    the distributed loop ``_clf_gd`` on the same pinned features, including
-   inputs whose margins reach both clip ends of the hard-sigmoid.
+   inputs whose margins reach both clip ends of the hard-sigmoid, and the
+   frozen-weight scoring gives the driver scoring's rows for them.
 3. A memo hit scores on the driver, with the first call's rows.
 4. Where an int64 sum of the kernel could wrap, it declines, and the
    routed train falls back to the distributed loop, where ANSI mode raises.
@@ -15,6 +16,7 @@
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -120,6 +122,11 @@ def test_driver_kernel_matches_distributed_loop(spark, seed):
         want = corpus._clf_gd(feats, labels, n, dims, n_iter, lr_num, lr_den)
         got = corpus._clf_gd_local(design, n, dims, n_iter, lr_num, lr_den)
         assert got == want, (n_iter, lr_num, lr_den)
+        # both scoring routes: one intercept per source row of a doc id,
+        # and no row for the NULL doc id
+        frozen = corpus._clf_score_frozen(docs, labels, got, dims, n).collect()
+        local = corpus._clf_score_local(spark, design, got, labels).collect()
+        assert Counter(map(tuple, frozen)) == Counter(map(tuple, local)), n_iter
     # the margins the large-step run trained on (iterations 0..n_iter-1)
     # pass both clip ends of the hard-sigmoid, negative margins included
     m = np.concatenate([

@@ -1,7 +1,7 @@
 """Round-8 cross-engine property evidence: DSIR importance weights /
-resampling and the pure-JVM distributed-BPE merge loop hold on RANDOM
-inputs, not just the registered fixture — Spark operator vs the DuckDB
-twin (or the driver backend) executed in-process."""
+resampling and the BPE trainer hold on RANDOM inputs, not just the
+registered fixture — Spark operator vs the DuckDB twin executed
+in-process."""
 
 import random
 
@@ -94,14 +94,13 @@ def test_dsir_sample_is_weight_tilted_subset(spark):
     assert again == ids
 
 
-def test_bpe_train_distributed_matches_driver_backend_random(spark, monkeypatch):
-    """The JVM fold kernel (round-8 rewrite) must replay the driver
-    backend's merge sequence bit-for-bit on corpora with overlap-heavy
-    repeats (the 'aaaa' shapes where greedy left-to-right order matters)."""
-    from elasticsearch_drift_plugin_spark.operators import corpus
+def test_bpe_train_distributed_matches_driver_backend_random(spark):
+    """The BPE trainer must replay its DuckDB twin's merge sequence
+    bit-for-bit on corpora with overlap-heavy repeats (the 'aaaa' shapes
+    where greedy left-to-right order matters)."""
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
-        bpe_train_distributed,
+        bpe_train_sql,
     )
 
     rng = random.Random(80)
@@ -111,7 +110,7 @@ def test_bpe_train_distributed_matches_driver_backend_random(spark, monkeypatch)
         for i in range(40)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-    got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12).collect()]
-    want = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
+    got = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "source", "text"])
+    want = _duck(bpe_train_sql(n_merges=12), pdf)
     assert got == want

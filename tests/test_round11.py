@@ -386,70 +386,70 @@ def test_sig_terms_queryless_still_needs_explicit_foreground(sig_df):
 
 
 # ---------------------------------------------------------------------------
-# BPE multi-merge batching: the batched distributed loop must be
-# BIT-IDENTICAL to the driver argmax trainer — same merges, same ranks,
-# same pair counts — on the Sennrich worked example (whose merges CHAIN:
-# es → est → est</w>, forcing batch truncations) and on the driver corpus.
+# BPE: the driver argmax trainer must be BIT-IDENTICAL to its DuckDB twin
+# — same merges, same ranks, same pair counts — on the Sennrich worked
+# example (whose merges CHAIN: es → est → est</w>), on the driver corpus
+# and on hostile symbols.
 # ---------------------------------------------------------------------------
 
-
-def _sennrich_docs(spark):
-    rows = [
-        ("low " * 5).strip(),
-        ("lower " * 2).strip(),
-        ("newest " * 6).strip(),
-        ("widest " * 3).strip(),
-    ]
-    return spark.createDataFrame([(r,) for r in rows], "text string")
+_SENNRICH = [
+    (("low " * 5).strip(),),
+    (("lower " * 2).strip(),),
+    (("newest " * 6).strip(),),
+    (("widest " * 3).strip(),),
+]
 
 
-def test_bpe_batched_bit_identical_sennrich(spark, monkeypatch):
-    from elasticsearch_drift_plugin_spark.operators import corpus
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train,
-        bpe_train_distributed,
-    )
+def _duck(sql: str, docs):
+    import duckdb
 
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-    docs = _sennrich_docs(spark)
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()]
+    con = duckdb.connect()
+    con.register("documents", docs)
+    return con.sql(sql).fetchall()
+
+
+def _bpe_twin(rows: list, n_merges: int) -> list:
+    """The merge table of ``bpe_train_sql`` over single-column text rows."""
+    import pandas as pd
+
+    from elasticsearch_drift_plugin_spark.operators.corpus import bpe_train_sql
+
+    return _duck(bpe_train_sql(n_merges=n_merges), pd.DataFrame(rows, columns=["text"]))
+
+
+def test_bpe_batched_bit_identical_sennrich(spark):
+    from elasticsearch_drift_plugin_spark.operators.corpus import bpe_train
+
+    docs = spark.createDataFrame(_SENNRICH, "text string")
     drv = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
-    assert bat == drv
+    assert drv == _bpe_twin(_SENNRICH, 10)
     # the classic first merges: (e,s) then the CHAINED (es,t), (est,</w>)
-    assert [(m[1], m[2]) for m in bat[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
+    assert [(m[1], m[2]) for m in drv[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
 
 
-def test_bpe_batched_bit_identical_driver_corpus(spark, monkeypatch):
-    from elasticsearch_drift_plugin_spark.operators import corpus
+def test_bpe_batched_bit_identical_driver_corpus(spark):
+    import pandas as pd
+
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
-        bpe_train_distributed,
+        bpe_train_sql,
     )
 
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=20).collect()]
-    drv = [tuple(r) for r in bpe_train(docs, n_merges=20).collect()]
-    assert bat == drv
+    path = "/root/testdata/sf0.001/documents.parquet"
+    drv = [tuple(r) for r in bpe_train(spark.read.parquet(path), n_merges=20).collect()]
+    assert drv == _duck(bpe_train_sql(n_merges=20), pd.read_parquet(path))
 
 
-def test_bpe_batched_nasty_symbols(spark, monkeypatch):
-    """Symbols enter SQL text (sql_str escaping) — quotes, backslashes
-    and unicode must fold identically in the batched loop and the driver
-    trainer."""
-    from elasticsearch_drift_plugin_spark.operators import corpus
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train,
-        bpe_train_distributed,
-    )
+def test_bpe_batched_nasty_symbols(spark):
+    """Quotes, backslashes and unicode in the symbols must fold
+    identically in the trainer and its DuckDB twin."""
+    from elasticsearch_drift_plugin_spark.operators.corpus import bpe_train
 
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
     rows = [("d'o d'o d'o a\\b a\\b éé éé éé",)]
     docs = spark.createDataFrame(rows * 3, "text string")
-    bat = [tuple(r) for r in bpe_train_distributed(docs, n_merges=6).collect()]
     drv = [tuple(r) for r in bpe_train(docs, n_merges=6).collect()]
-    assert bat == drv and len(bat) >= 3
-    syms = {m[1] for m in bat} | {m[2] for m in bat}
+    assert drv == _bpe_twin(rows * 3, 6) and len(drv) >= 3
+    syms = {m[1] for m in drv} | {m[2] for m in drv}
     assert any("'" in s or "\\" in s or "é" in s for s in syms)
 
 
@@ -466,7 +466,7 @@ def test_sql_str_escaping_round_trips(spark):
                 assert got == s, (escaped, s, got)
 
 
-def test_hostile_symbol_and_column_name_in_both_parser_modes(spark, monkeypatch):
+def test_hostile_symbol_and_column_name_in_both_parser_modes(spark):
     """A BPE symbol and a column name holding a quote, a backslash and a
     non-ASCII character reach SQL text intact under both settings of
     ``spark.sql.parser.escapedStringLiterals``."""
@@ -476,15 +476,11 @@ def test_hostile_symbol_and_column_name_in_both_parser_modes(spark, monkeypatch)
 
     from elasticsearch_drift_plugin_spark import proportional_sum
     from elasticsearch_drift_plugin_spark.memo import scoped_conf
-    from elasticsearch_drift_plugin_spark.operators import corpus
-    from elasticsearch_drift_plugin_spark.operators.corpus import (
-        bpe_train,
-        bpe_train_distributed,
-    )
+    from elasticsearch_drift_plugin_spark.operators.corpus import bpe_train
 
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-    docs = spark.createDataFrame([("d'o d'o d'o a\\b a\\b éé éé éé",)] * 3, "text string")
-    driver = [tuple(r) for r in bpe_train(docs, n_merges=6).collect()]
+    rows = [("d'o d'o d'o a\\b a\\b éé éé éé",)] * 3
+    docs = spark.createDataFrame(rows, "text string")
+    twin = _bpe_twin(rows, 6)
     name = "st'a\\rté"
     bad = spark.createDataFrame(
         [(-5, 10, 1.0)],
@@ -496,8 +492,8 @@ def test_hostile_symbol_and_column_name_in_both_parser_modes(spark, monkeypatch)
     )
     for escaped in ("false", "true"):
         with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
-            dist = bpe_train_distributed(docs, n_merges=6)
-            assert [tuple(r) for r in dist.collect()] == driver, escaped
+            merges = bpe_train(docs, n_merges=6)
+            assert [tuple(r) for r in merges.collect()] == twin, escaped
             out = proportional_sum(bad, name, "end_ms", "value", interval=10, start=0, end=100)
             with pytest.raises(Exception, match=re.escape(f"field [{name}] must be >= 0")):
                 out.collect()

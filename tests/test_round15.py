@@ -1,5 +1,5 @@
-"""Round-15 (optimization round 2) regressions: the BPE small-vocab
-driver routing guard, the bench memo-clearing hook, and the psum
+"""Round-15 (optimization round 2) regressions: the BPE trainer against
+its DuckDB twin, the bench memo-clearing hook, and the psum
 projection-boundary gating.
 """
 
@@ -7,13 +7,14 @@ from __future__ import annotations
 
 import importlib
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from elasticsearch_drift_plugin_spark import clear_result_memos
-from elasticsearch_drift_plugin_spark.operators import corpus
 from elasticsearch_drift_plugin_spark.operators.corpus import (
     bpe_train,
-    bpe_train_distributed,
+    bpe_train_sql,
 )
 
 _psum_mod = importlib.import_module(
@@ -21,31 +22,28 @@ _psum_mod = importlib.import_module(
 )
 
 
-# --- BPE small-vocab driver routing (VERDICT r14 item 6) ---------------
+# --- BPE driver kernel vs its DuckDB twin ------------------------------
 
-def _bpe_docs(spark):
+def _duck(sql: str, docs: pd.DataFrame):
+    con = duckdb.connect()
+    con.register("documents", docs)
+    return con.sql(sql).fetchall()
+
+
+def test_bpe_driver_route_matches_distributed(spark):
+    """The driver kernel's merge table equals the unrolled full-recount
+    replay of ``bpe_train_sql`` on the Sennrich worked example."""
     rows = [
         ("low " * 5).strip(),
         ("lower " * 2).strip(),
         ("newest " * 6).strip(),
         ("widest " * 3).strip(),
     ]
-    return spark.createDataFrame([(r,) for r in rows], "text string")
-
-
-def test_bpe_driver_route_matches_distributed(spark, monkeypatch):
-    """A small vocab routes to the driver kernel (default guard); forcing
-    BPE_DRIVER_VOCAB=0 keeps the executor-resident loop. Both must emit
-    the identical merge table — and match the plain driver backend."""
-    docs = _bpe_docs(spark)
-    routed = [
-        tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()
-    ]
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
-    forced = [tuple(r) for r in bpe_train_distributed(docs, n_merges=10).collect()]
+    docs = spark.createDataFrame([(r,) for r in rows], "text string")
     driver = [tuple(r) for r in bpe_train(docs, n_merges=10).collect()]
-    assert routed == forced == driver
-    assert [(m[1], m[2]) for m in routed[:3]] == [
+    twin = _duck(bpe_train_sql(n_merges=10), pd.DataFrame({"text": rows}))
+    assert driver == twin
+    assert [(m[1], m[2]) for m in driver[:3]] == [
         ("e", "s"), ("es", "t"), ("est", "</w>")
     ]
 

@@ -2,6 +2,8 @@
 struct-array fixture (the actual nested mapping shape), and the parquet
 footer-bounds path for auto_date_histogram."""
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from elasticsearch_drift_plugin_spark.operators.relational import (
@@ -241,44 +243,45 @@ def test_counter_rate_negative_values_stream_equals_batch(spark, tmp_path):
     assert folded == expected
 
 
-def test_bpe_train_distributed_matches_driver(spark, monkeypatch):
-    """The executor-resident trainer (chained-fold batches, driver holds
-    only the count heap) produces the BIT-IDENTICAL merge sequence to the
-    driver backend — on the classic Sennrich golden and on a random
-    multi-partition corpus — inside a wall-clock bound (per batch cost =
-    one local job dispatch + a vectorized vocab scan)."""
+def _duck(sql: str, docs: pd.DataFrame):
+    con = duckdb.connect()
+    con.register("documents", docs)
+    return con.sql(sql).fetchall()
+
+
+def test_bpe_train_distributed_matches_driver(spark):
+    """The BPE trainer produces the BIT-IDENTICAL merge sequence to its
+    DuckDB twin — on the classic Sennrich golden and on a random
+    multi-partition corpus — inside a wall-clock bound."""
     import random
     import time
 
-    from elasticsearch_drift_plugin_spark.operators import corpus
     from elasticsearch_drift_plugin_spark.operators.corpus import (
         bpe_train,
-        bpe_train_distributed,
+        bpe_train_sql,
     )
 
-    monkeypatch.setattr(corpus, "BPE_DRIVER_VOCAB", 0)
     golden = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    docs = spark.createDataFrame(
-        [(0, " ".join(golden))], "doc_id long, text string"
-    )
-    want = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
-    got = [tuple(r) for r in bpe_train_distributed(docs, n_merges=12).collect()]
+    rows = [(0, " ".join(golden))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _duck(bpe_train_sql(n_merges=12), pd.DataFrame(rows, columns=["doc_id", "text"]))
+    got = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
     assert got == want and len(want) == 12
 
     rng = random.Random(11)
     words = [
         "".join(rng.choices("abcd", k=rng.randint(3, 8))) for _ in range(4000)
     ]
+    rows2 = [(i, " ".join(words[i * 500:(i + 1) * 500])) for i in range(8)]
     docs2 = spark.createDataFrame(
-        [(i, " ".join(words[i * 500:(i + 1) * 500])) for i in range(8)],
-        "doc_id long, text string",
+        rows2, "doc_id long, text string"
     ).repartition(8).localCheckpoint(eager=True)
     t0 = time.time()
-    got2 = [tuple(r) for r in bpe_train_distributed(docs2, n_merges=60).collect()]
+    got2 = [tuple(r) for r in bpe_train(docs2, n_merges=60).collect()]
     dt = time.time() - t0
-    want2 = [tuple(r) for r in bpe_train(docs2, n_merges=60).collect()]
+    want2 = _duck(bpe_train_sql(n_merges=60), pd.DataFrame(rows2, columns=["doc_id", "text"]))
     assert got2 == want2 and len(want2) == 60
-    assert dt < 120.0, f"60 distributed merges took {dt:.1f}s"
+    assert dt < 120.0, f"60 merges took {dt:.1f}s"
 
 
 def test_bpe_train_1k_merges_wall_clock(spark):

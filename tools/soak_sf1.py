@@ -54,14 +54,12 @@ FLAGSHIPS = (
     "graph_pagerank",
     "es_search_knn_indexed",
     # round-10 (VERDICT r9 item: sf1 soak of the r8/r9 newcomers): the
-    # DSIR pair (hashed n-gram models + Gumbel top-k), distributed BPE
-    # (per-merge JVM fold over 10× corpus), and the trained quality gate
-    # (MAX_CLF_TRAIN_DOCS guard NOT tripped at 5k docs/replica × 10 =
-    # 50k < 1e5; at the next decade the train-on-hash_sample recipe
+    # DSIR pair (hashed n-gram models + Gumbel top-k) and the trained
+    # quality gate (MAX_CLF_TRAIN_DOCS guard NOT tripped at 5k docs/replica
+    # × 10 = 50k < 1e5; at the next decade the train-on-hash_sample recipe
     # applies)
     "corpus_dsir_weights",
     "corpus_dsir_sample",
-    "corpus_bpe_train_dist",
     "corpus_quality_clf",
     "train_curate_clf",
     # round-10 newcomers: the two-data-pass terms-child fills, the
